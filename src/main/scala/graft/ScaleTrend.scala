@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.{AggregateOp, DAG, DagExecutor, Edge, Processors}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -237,6 +239,59 @@ object ScaleTrend {
       }))
   }
 
+  /** The dense fixture: K keys × S sessions × E events per session, events
+    * interleaved time-ordered per partition (the bounded-disorder source
+    * contract). S is the axis the replica factor scales.
+    */
+  private def denseEvents(sc: org.apache.spark.SparkContext, sessionsPerKey: Int,
+                          keys: Int = 96, eventsPerSession: Int = 240,
+                          parts: Int = 8): RDD[Any] =
+    sc.parallelize(0 until parts, parts).flatMap { p =>
+      val local = (p * keys / parts) until ((p + 1) * keys / parts)
+      for {
+        s <- (0 until sessionsPerKey).iterator
+        j <- (0 until eventsPerSession).iterator
+        k <- local.iterator
+      } yield (s * 100000L + j, s"k$k").asInstanceOf[Any]
+    }
+
+  /** Time the SHIPPED (two-stage preMerge + combineFragments) topology over
+    * the dense fixture; returns (seconds, distinct sessions emitted) and
+    * asserts the expected session count — a growth row that silently
+    * under-merged would otherwise read as a win.
+    */
+  private def timeTwoStage(spark: SparkSession, sessionsPerKey: Int,
+                           keys: Int = 96): (Double, Int) = {
+    val timeout = 30L
+    val parts = 8
+    val dag = new DAG
+    val wm = dag.newVertex("wm",
+      Processors.insertWatermarksP[(Long, String)](
+        _._1, lag = timeout, throttleFrame = timeout))
+      .localParallelism(parts)
+    val pre = dag.newVertex("premerge",
+      Processors.sessionPreMergeP[String, Long](
+        timeout, _.asInstanceOf[(Long, String)]._1,
+        _.asInstanceOf[(Long, String)]._2, AggregateOp.counting))
+      .localParallelism(parts)
+    val sess = dag.newVertex("session",
+      Processors.combineSessionFragmentsP[String, Long, Long](
+        AggregateOp.counting, (s, e, k, n) => (s, e, k, n)))
+    dag
+      .edge(Edge.between(wm, pre))
+      .edge(Edge.between(pre, sess)
+        .partitioned(_.asInstanceOf[(Long, Long, String, Long)]._3)
+        .distributed())
+    val events = denseEvents(spark.sparkContext, sessionsPerKey, keys)
+    val t0 = System.nanoTime()
+    val out = DagExecutor.execute(spark, dag, inputs = Map("wm" -> events))("session")
+    val dt = (System.nanoTime() - t0) / 1e9
+    val n = out.size
+    require(n == keys * sessionsPerKey,
+      s"expected ${keys * sessionsPerKey} sessions, got $n")
+    (dt, n)
+  }
+
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
@@ -299,22 +354,23 @@ object ScaleTrend {
     }
 
     // dense-session growth row (r14, VERDICT r13 item 7): the two-stage
-    // session topology's DENSE regime — the shape SessionDenseAB proved the
-    // pre-merge wins on (12.5× fewer shuffled bytes) but the sparse q176
-    // fixture can't exercise. Synthetic K×S×E fixture; the replica factor
-    // scales S (sessions per key), so expected growth is ~linear. Tracked
-    // per round so the shipped topology's advantage can't silently decay.
+    // session topology's DENSE regime — the shape the pre-merge wins on
+    // (12.5× fewer shuffled bytes, BASELINE.md "Round 13: DAG session
+    // windows made scale-safe") but the sparse q176 fixture can't exercise.
+    // Synthetic K×S×E fixture; the replica factor scales S (sessions per
+    // key), so expected growth is ~linear. Tracked per round so the shipped
+    // topology's advantage can't silently decay.
     val denseRow: Option[(Double, Double)] =
       if (only.forall(_.exists("dense_session".startsWith))) {
         try {
           // the q01 warmup doesn't touch the DAG path: warm it separately or
           // the 1× row carries the JIT cost (measured 1.44 s vs 0.51 s at 2×)
-          SessionDenseAB.timeTwoStage(spark, sessionsPerKey = 4)
+          timeTwoStage(spark, sessionsPerKey = 4)
           // best-of-2 base, same method as the battery rows above
-          val (t1a, _) = SessionDenseAB.timeTwoStage(spark, sessionsPerKey = 40)
-          val (t1b, _) = SessionDenseAB.timeTwoStage(spark, sessionsPerKey = 40)
+          val (t1a, _) = timeTwoStage(spark, sessionsPerKey = 40)
+          val (t1b, _) = timeTwoStage(spark, sessionsPerKey = 40)
           val t1 = math.min(t1a, t1b)
-          val (tN, _) = SessionDenseAB.timeTwoStage(spark, sessionsPerKey = 40 * factor)
+          val (tN, _) = timeTwoStage(spark, sessionsPerKey = 40 * factor)
           val g = tN / t1
           val flag = if (g > factor * 1.5) " **SUPER-LINEAR**" else ""
           println(f"| dense_session_two_stage (synthetic) | $t1%.2f | $tN%.2f | ${g}%.1f×$flag |")

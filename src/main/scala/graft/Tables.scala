@@ -66,16 +66,17 @@ object Tables {
     * is added. The exchange, when taken, carries each input byte once —
     * bounded by the scan itself — and only where callers know the next pass
     * is CPU-bound per row (the tokenize/hash family), never blanket.
-    * `GRAFT_SCAN_FANOUT=0` disables for A/B.
+    * The split count comes off the physical plan's file scans, so the probe
+    * runs no job even when `df` holds an exchange; a frame with no file scan
+    * is returned unchanged.
     */
-  def fanOutScan(df: DataFrame): DataFrame =
-    if (sys.env.get("GRAFT_SCAN_FANOUT").contains("0")) df
-    else {
-      val target = df.sparkSession.sparkContext.defaultParallelism
-      // planning-only partition probe (no job): the physical scan's split count
-      val cur = df.rdd.getNumPartitions
-      if (cur * 2 <= target) df.repartition(target) else df
+  def fanOutScan(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    org.apache.spark.sql.graftops.Bridge.scanPartitions(df) match {
+      case Some(cur) if cur * 2 <= target => df.repartition(target)
+      case _ => df
     }
+  }
 
   /** Register every table as a temp view so `spark.sql` queries see the same names
     * the DuckDB oracle sees.

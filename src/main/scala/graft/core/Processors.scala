@@ -534,7 +534,8 @@ object Processors {
     * Scale: the partitioned edge now carries ~(keys × active sessions per
     * watermark interval) fragments instead of every event — the q174
     * frame-partial trick applied to sessions (measured 12.5× fewer shuffled
-    * bytes on dense-session traffic, graft.SessionDenseAB).
+    * bytes on dense-session traffic, BASELINE.md "Round 13: DAG session
+    * windows made scale-safe").
     *
     * Late-drop nuance vs the single-stage form: this stage drops events
     * below its OWN partition's watermark, while the single-stage processor

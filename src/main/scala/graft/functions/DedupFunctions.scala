@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftops.Bridge
 
 /** Near-duplicate detection primitives (MinHash+LSH, SimHash, n-gram Jaccard)
   * as pure Spark column expressions — codegen-friendly, deterministic, and
@@ -16,8 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupFunctions {
 
-  private val P = 4294967311L // first prime > 2^32
-
   /** Spread a NARROW input across the cluster before the CPU-dense signature
     * builds below (one md5 per token + minhash permutations, ~100k× the input
     * bytes in CPU). See [[Width.widen]] for the guard's scale argument.
@@ -29,37 +28,24 @@ object DedupFunctions {
     * Materialize this as its own column (a projection boundary) so the md5 pass
     * runs once, not once per derived signature value.
     * (Public technique: Kirsch & Mitzenmacher, "Less Hashing, Same Performance".)
+    * Native one-digest-pass form (expr.Md5HalfPairs): the composed
+    * `conv(substring(md5(t), ...), 16, 10)` chain hex-encodes the digest and
+    * parses it back PER TOKEN — profiled as the dominant CPU of every LSH
+    * signature build (OPTIMIZATION_r19.md); Md5HalfSpec pins bit-equality
+    * against that chain.
     */
   def tokenHashPairs(tokenSet: Column): Column =
-    if (sys.env.contains("GRAFT_TOKENHASH_FOLD"))
-      transform(tokenSet, t => struct(
-        conv(substring(md5(t), 1, 8), 16, 10).cast("long").as("h1"),
-        conv(substring(md5(t), 9, 8), 16, 10).cast("long").as("h2")))
-    else {
-      // native one-digest-pass form (r19): the composed chain hex-encodes the
-      // digest and `conv`-parses it back PER TOKEN — profiled as the dominant
-      // CPU of every LSH signature build (Md5TokenHashes scaladoc has the
-      // numbers); Md5HalfSpec pins bit-equality against the fold above
-      import org.apache.spark.sql.graftops.Bridge
-      Bridge.column(graft.functions.expr.Md5HalfPairs(Bridge.expression(tokenSet)))
-    }
+    Bridge.column(graft.functions.expr.Md5HalfPairs(Bridge.expression(tokenSet)))
 
   /** Signature of `h` MinHash values from a precomputed `tokenHashPairs` column:
     * sample i = min over tokens of `(h1 + i*h2) mod p` — native codegen
     * expression computing all `h` samples in one pass over the tokens
-    * (graft.functions.expr.MinhashSignatures). `GRAFT_MINHASH_FOLD` switches
-    * back to the h-pass higher-order form for A/B benchmarking.
+    * (graft.functions.expr.MinhashSignatures) instead of `h` interpreted
+    * `array_min(transform(...))` passes; MinhashSignaturesSpec pins it
+    * against that composed form.
     */
   def minhashSignatureFromPairs(pairs: Column, h: Int): Column =
-    if (sys.env.contains("GRAFT_MINHASH_FOLD"))
-      array((0 until h).map { i =>
-        array_min(transform(pairs, pr =>
-          pmod(pr.getField("h1") + lit(i.toLong) * pr.getField("h2"), lit(P))))
-      }: _*)
-    else {
-      import org.apache.spark.sql.graftops.Bridge
-      Bridge.column(graft.functions.expr.MinhashSignatures(Bridge.expression(pairs), h))
-    }
+    Bridge.column(graft.functions.expr.MinhashSignatures(Bridge.expression(pairs), h))
 
   /** Convenience: signature straight from a token set (hashes once per call —
     * prefer the two-step form inside multi-signature pipelines).
@@ -112,50 +98,26 @@ object DedupFunctions {
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Distinct-set Jaccard over two ARRAY<BIGINT> columns (the engine's pair
-    * representation — every LSH/shingle path compares long hash arrays). For
-    * other element types use `jaccardComposed`, which works on any array.
-    * NULL arrays propagate NULL on both paths.
+    * representation — every LSH/shingle path compares long hash arrays) as
+    * the native one-pass expression (expr.JaccardSimilarity). The composed
+    * `size(array_intersect) / size(array_union)` form pays two hash-set
+    * builds plus two materialized arrays PER PAIR, and the LSH verify step
+    * runs it on millions of candidate pairs (q86 3.7× faster, BASELINE.md
+    * "Round 4 (continuation): native one-pass Jaccard"). JaccardSpec pins
+    * the native form against it. NULL arrays propagate NULL.
     */
   def jaccard(a: Column, b: Column): Column =
-    if (sys.env.contains("GRAFT_JACCARD_FOLD")) jaccardComposed(a, b)
-    else {
-      import org.apache.spark.sql.graftops.Bridge
-      Bridge.column(graft.functions.expr.JaccardSimilarity(
-        Bridge.expression(a), Bridge.expression(b)))
-    }
+    Bridge.column(graft.functions.expr.JaccardSimilarity(
+      Bridge.expression(a), Bridge.expression(b)))
 
   /** One-pass distinct-set overlap counts struct(inter, na, nb) over two
     * ARRAY<BIGINT> columns — the containment verify's primitive (q93): three
     * counts from one table pass instead of array_intersect + 2×
-    * array_distinct per candidate pair. `GRAFT_OVERLAP_FOLD` switches back to
-    * the composed builtins for A/B.
+    * array_distinct per candidate pair (SetOverlapSpec pins the equality).
     */
   def setOverlap(a: Column, b: Column): Column =
-    if (sys.env.contains("GRAFT_OVERLAP_FOLD"))
-      when(a.isNull || b.isNull, lit(null))
-        .otherwise(struct(
-          size(array_intersect(a, b)).as("inter"),
-          size(array_distinct(a)).as("na"),
-          size(array_distinct(b)).as("nb")))
-    else {
-      import org.apache.spark.sql.graftops.Bridge
-      Bridge.column(graft.functions.expr.SetOverlap(
-        Bridge.expression(a), Bridge.expression(b)))
-    }
-
-  /** Composed-builtin form (the A/B baseline behind GRAFT_JACCARD_FOLD, and
-    * the semantic reference the native expression must match — including
-    * NULL-array propagation, hence the explicit null gate): two hash-set
-    * builds plus two materialized result arrays PER PAIR — the native
-    * one-pass expression exists because the LSH verify step runs this on
-    * millions of candidate pairs (q36/q86). Accepts any array element type.
-    */
-  def jaccardComposed(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val uni = size(array_union(a, b)).cast("double")
-    when(a.isNull || b.isNull, lit(null).cast("double"))
-      .when(uni > 0, inter / uni).otherwise(lit(0.0))
-  }
+    Bridge.column(graft.functions.expr.SetOverlap(
+      Bridge.expression(a), Bridge.expression(b)))
 
   /** Connected components over a pair list (near-dup clustering: every doc in
     * a component is transitively a near-dup of the rest; the component min id
@@ -271,7 +233,6 @@ object DedupFunctions {
       var converged = false
       var it = 0
       while (!converged && it < maxIter) {
-        val t0 = System.nanoTime()
         val nbrMin = edges.join(labels.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst").as("id2")).agg(min("label").as("nbr"))
         // carry the previous label IN-PLAN so change detection needs no extra
@@ -288,8 +249,6 @@ object DedupFunctions {
         labels = jumped.select(col("id"), col("label"))
         converged = changes == 0
         it += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(
-          f"[cc] iter=$it changes=$changes ${(System.nanoTime() - t0) / 1e9}%.1fs")
       }
       edges.unpersist(); p.unpersist()
       // unconverged labels SPLIT real components — silently returning them
@@ -325,7 +284,6 @@ object DedupFunctions {
     * pre-scope with `scopeCols` if a workload legitimately mixes populations
     * inside one band bucket. Truly-identical docs collide in EVERY band, so
     * the keep-min-id dedup verdict for exact floods is unchanged either way.
-    * Set GRAFT_LSH_DEBUG=1 to log how many buckets chained.
     */
   def candidatePairs(df: DataFrame, idCol: String, setCol: String,
                      hashes: Int, bands: Int, minJaccard: Double,
@@ -385,45 +343,26 @@ object DedupFunctions {
     }
     // mega-bucket key set: an aggregate over the cached sig (map-side combine
     // → a few rows per bucket key), NOT a window — the healthy path must not
-    // pay a full sort for a guard that almost never fires
-    def hotKeys: DataFrame =
-      sig.groupBy(bucketKey: _*).agg(count(lit(1)).as("__bsz"))
-        .filter(col("__bsz") > maxBucket)
-        .select(bucketKey: _*)
-    // guard strategies, A/B'd warm in LshBench (see BASELINE.md r5: q47
-    // shape at sf0.1, best-of-3 — off 1.76 s, driver 1.82 s, inplan 2.21 s):
-    //   driver (default) — one tiny driver-side emptiness probe on the
-    //     aggregated frame; the healthy path then runs EXACTLY the unguarded
-    //     all-pairs plan. The probe's job materializes the sig cache that the
-    //     pair job would have paid anyway, so its marginal cost is the agg +
-    //     one scheduling round-trip: ~0.05 s at sf0.1 — the guard is free.
-    //   inplan — no driver action: broadcast the hot-key set into an
-    //     anti-join (all-pairs side) + semi-join (chain side) + union. Pays
-    //     two extra broadcast-probe scans of sig and an (empty) window even
-    //     when no bucket is hot — measured +0.4 s warm, WORSE than the probe.
-    //   off — r3's unguarded plan (quadratic on a mega-bucket); floor.
-    var probed: Option[DataFrame] = None
-    val mode = sys.props.get("graft.lsh.guard")
-      .orElse(sys.env.get("GRAFT_LSH_GUARD")).getOrElse("driver")
-    val pairsRaw = mode match {
-      case "off" => allPairsOf(sig)
-      case "inplan" =>
-        val hot = broadcast(hotKeys)
-        allPairsOf(sig.join(hot, joinKeys, "left_anti"))
-          .unionByName(chainPairsOf(sig.join(hot, joinKeys, "left_semi")))
-      case _ =>
-        val hot = hotKeys.cache()
-        probed = Some(hot)
-        val hotBuckets = hot.count()
-        if (sys.env.contains("GRAFT_LSH_DEBUG"))
-          System.err.println(s"[lsh] buckets over maxBucket=$maxBucket (chained): $hotBuckets")
-        if (hotBuckets == 0) allPairsOf(sig)
-        else {
-          val hotB = broadcast(hot)
-          allPairsOf(sig.join(hotB, joinKeys, "left_anti"))
-            .unionByName(chainPairsOf(sig.join(hotB, joinKeys, "left_semi")))
-        }
-    }
+    // pay a full sort for a guard that almost never fires. One tiny
+    // driver-side emptiness probe on it; the healthy path then runs EXACTLY
+    // the unguarded all-pairs plan. The probe's job materializes the sig
+    // cache that the pair job would have paid anyway, so the guard costs the
+    // agg + one scheduling round-trip. Measured on the q47 shape at sf0.1
+    // (best-of-3 warm): unguarded 1.76 s, this probe 1.82 s; an in-plan
+    // broadcast anti/semi-join guard with no driver action read 2.21 s (two
+    // extra probe scans of sig even when no bucket is hot) — BASELINE.md
+    // "Round 5: candidatePairs mega-bucket guard A/B".
+    val hot = sig.groupBy(bucketKey: _*).agg(count(lit(1)).as("__bsz"))
+      .filter(col("__bsz") > maxBucket)
+      .select(bucketKey: _*)
+      .cache()
+    val pairsRaw =
+      if (hot.count() == 0) allPairsOf(sig)
+      else {
+        val hotB = broadcast(hot)
+        allPairsOf(sig.join(hotB, joinKeys, "left_anti"))
+          .unionByName(chainPairsOf(sig.join(hotB, joinKeys, "left_semi")))
+      }
     val pairs = pairsRaw
       .select(col("id_a"), col("id_b"), jaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       // filter before dedup: jaccard is pure per pair, so duplicates pass or
@@ -436,7 +375,7 @@ object DedupFunctions {
     // orders of magnitude smaller; callers may unpersist it when done)
     val snap = pairs.cache()
     snap.count()
-    probed.foreach(_.unpersist())
+    hot.unpersist()
     sig.unpersist()
     snap
   }

@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftops.Bridge
 
 /** Vector-similarity primitives over `ARRAY<FLOAT>` embedding columns, built on
-  * Spark's higher-order array functions (`zip_with`/`aggregate`/`transform`) so
-  * they run inside codegen without UDF overhead.
+  * Spark's higher-order array functions (`aggregate`/`transform`) and, for the
+  * per-pair hot paths (`dot`, `sqDist`), native codegen expressions — all run
+  * inside codegen without UDF overhead.
   *
   * Scale design: brute-force top-k is the exact baseline (one broadcast of the
   * query set, a map-side score, and a per-query top-k — no shuffle of the corpus);
@@ -17,61 +19,36 @@ object SimilarityFunctions {
   /** Cast a float vector to double for stable, engine-comparable arithmetic. */
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  /** Native-codegen dot product (custom Catalyst Expression, see
-    * graft.functions.expr.DotProduct) — same left-to-right summation as `dot`,
-    * bit-identical results, one tight loop inside whole-stage codegen. Use in
-    * per-pair scoring hot paths.
+  /** Dot product as the native codegen expression
+    * (graft.functions.expr.DotProduct): left-to-right summation, bit-identical
+    * to the `aggregate(zip_with(...))` fold and to the DuckDB oracle's
+    * `list_sum(list_transform(...))` — DotProductSpec pins it against the fold.
+    * One tight loop inside whole-stage codegen instead of an interpreted
+    * per-pair fold (pair-dedup 2.9 → 1.5 s warm, BASELINE.md "Round 2
+    * measured").
     */
-  def dotNative(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftops.Bridge
+  def dot(a: Column, b: Column): Column =
     Bridge.column(graft.functions.expr.DotProduct(
       Bridge.expression(a), Bridge.expression(b)))
-  }
-
-  /** Hot-path dot: native codegen expression unless GRAFT_DOT_FOLD is set
-    * (A/B escape hatch for benchmarking the two forms).
-    */
-  def dotAuto(a: Column, b: Column): Column =
-    if (sys.env.contains("GRAFT_DOT_FOLD")) dot(a, b) else dotNative(a, b)
 
   def norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
 
-  /** Squared L2 distance as the higher-order fold — the ORDER-PINNED
-    * sequential-sum contract (see [[sqDist]]).
-    */
-  def sqDistFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Squared L2 distance as the native codegen expression — bit-identical
-    * to [[sqDistFold]] (SquaredDistanceSpec pins it). Inputs are cast to
-    * array<double> first (a no-op for double arrays) so ARRAY<FLOAT>
-    * columns keep working exactly as the fold's per-element coercion
-    * allowed — KMeansLite.fit documents float-array inputs.
-    */
-  def sqDistNative(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftops.Bridge
-    Bridge.column(graft.functions.expr.SquaredDistance(
-      Bridge.expression(a.cast("array<double>")),
-      Bridge.expression(b.cast("array<double>"))))
-  }
-
   /** Squared L2 distance with the ORDER-PINNED sequential-sum contract —
     * the one definition KMeansLite's assignment/fit, the PQ/ADC tables and
     * q156's k-center selection (and their oracles' `list_sum` replays) all
-    * share. Hot path is [[sqDistNative]] (24–32% faster warm on the
-    * k-means family, BASELINE.md r8); GRAFT_SQDIST_FOLD switches back to
-    * [[sqDistFold]] (the dotAuto A/B pattern).
+    * share. Native codegen expression (graft.functions.expr.SquaredDistance),
+    * bit-identical to the `aggregate(zip_with((x - c)²))` fold
+    * (SquaredDistanceSpec pins it) and 24–32% faster warm on the k-means
+    * family (BASELINE.md "Round 8: native SquaredDistance expression").
+    * Inputs are cast to array<double> first (a no-op for double arrays) so
+    * ARRAY<FLOAT> columns keep working exactly as the fold's per-element
+    * coercion allowed — KMeansLite.fit documents float-array inputs.
     */
   def sqDist(a: Column, b: Column): Column =
-    if (sys.env.contains("GRAFT_SQDIST_FOLD")) sqDistFold(a, b)
-    else sqDistNative(a, b)
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+    Bridge.column(graft.functions.expr.SquaredDistance(
+      Bridge.expression(a.cast("array<double>")),
+      Bridge.expression(b.cast("array<double>"))))
 
   /** L2-normalize `vecCol` into `outCol`, computing the norm ONCE per row as a
     * scalar column that the element-wise divide then references. Pair-scoring
@@ -226,7 +203,7 @@ object SimilarityFunctions {
       "__craw", "cv").drop("__craw")
     val scored = c.crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dotAuto(col("qv"), col("cv")).as("cosine"))
+      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cosine"))
     // rank on the score QUANTIZED to 9 decimals (full precision stays in the
     // output): near-tied cosines computed with different arithmetic orders on
     // different engines/runs would otherwise flip integer ranks that no
@@ -258,7 +235,7 @@ object SimilarityFunctions {
     val scored = c.crossJoin(q)
       .filter(col("neg_label") =!= col("query_label"))
       .select(col("query_id"), col("neighbor_id"), col("neg_label"),
-        dotAuto(col("qv"), col("cv")).as("cosine"))
+        dot(col("qv"), col("cv")).as("cosine"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("cosine"), 9).desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)

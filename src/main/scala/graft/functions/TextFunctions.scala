@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftops.Bridge
 
 /** Text-analysis column functions for large-scale training-data pipelines.
   *
@@ -38,10 +39,8 @@ object TextFunctions {
     * callers never touch the Bridge glue). ASCII rows return by reference
     * without allocation; see expr.NfcHelper.
     */
-  def nfcNormalize(text: Column): Column = {
-    import org.apache.spark.sql.graftops.Bridge
+  def nfcNormalize(text: Column): Column =
     Bridge.column(graft.functions.expr.NfcNormalize(Bridge.expression(text)))
-  }
 
   /** Whitespace token count — the "wc -w" notion of tokens. */
   def wsTokenCount(text: Column): Column =
@@ -73,32 +72,22 @@ object TextFunctions {
   }
 
   /** Per-token 32-bit md5 hash (long). Materialize as its own column — the
-    * shingle step reads it many times per row.
+    * shingle step reads it many times per row. Native one-digest-pass form
+    * (expr.Md5Half), bit-identical to the composed
+    * `conv(substring(md5(t), 1, 8), 16, 10).cast(long)` chain (Md5HalfSpec;
+    * OPTIMIZATION_r19.md has the measurements).
     */
   def tokenLongHashes(text: Column): Column =
-    if (sys.env.contains("GRAFT_TOKENHASH_FOLD"))
-      transform(tokens(text), t => conv(substring(md5(t), 1, 8), 16, 10).cast("long"))
-    else {
-      // native one-digest-pass form (r19) — see expr.Md5TokenHashes; the
-      // composed chain is the GRAFT_TOKENHASH_FOLD A/B baseline and the
-      // semantic reference (Md5HalfSpec pins bit-equality)
-      import org.apache.spark.sql.graftops.Bridge
-      Bridge.column(graft.functions.expr.Md5Half(Bridge.expression(tokens(text))))
-    }
+    Bridge.column(graft.functions.expr.Md5Half(Bridge.expression(tokens(text))))
 
   /** Scalar md5-prefix hash: the first `nibbles` hex digits of md5(s) as a
     * long — the engine's deterministic slot/bucket hash
-    * (`conv(substring(md5(s), 1, n), 16, 10).cast(long)`), native since r20
-    * (expr.Md5PrefixLong, bit-identical; Md5HalfSpec pins it). The composed
-    * chain remains the GRAFT_TOKENHASH_FOLD A/B baseline.
+    * (`conv(substring(md5(s), 1, n), 16, 10).cast(long)`), as the native
+    * expr.Md5PrefixLong (bit-identical; Md5HalfSpec pins it against the
+    * composed chain; OPTIMIZATION_r20.md has the measurements).
     */
   def md5PrefixLong(s: Column, nibbles: Int = 8): Column =
-    if (sys.env.contains("GRAFT_TOKENHASH_FOLD"))
-      conv(substring(md5(s), 1, nibbles), 16, 10).cast("long")
-    else {
-      import org.apache.spark.sql.graftops.Bridge
-      Bridge.column(graft.functions.expr.Md5PrefixLong(Bridge.expression(s), nibbles))
-    }
+    Bridge.column(graft.functions.expr.Md5PrefixLong(Bridge.expression(s), nibbles))
 
   /** Distinct word-trigram hashes from a precomputed `tokenLongHashes` column:
     * trigram = h[i]·4099 + h[i+1]·31 + h[i+2] (< 2^45, exact in any engine's

@@ -28,7 +28,9 @@ import org.apache.spark.sql.types._
   * struct-argmin (the same argument documented at KMeansLite.assign).
   * Null contract: null array → null; elements are assumed non-null
   * (embedding fixtures; matches what the literal form required).
-  * `GRAFT_KMEANS_LITERALS=1` switches KMeansLite back to the literal tree.
+  * Measured: −11% (q65) to −41% (q109) warm against the literal tree
+  * (OPTIMIZATION_r20.md C2); the literal tree lives on only as
+  * ArgminSqDistSpec's reference.
   */
 case class ArgminSqDist(child: Expression, cents: Array[Array[Double]])
     extends UnaryExpression {

@@ -15,8 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
   *  - this expression emits ONE tight Java loop inside whole-stage codegen.
   *
   * Contract (summation order, null handling): see [[PairedDoubleArrayFold]]
-  * — bit-identical to `SimilarityFunctions.dot` and to the DuckDB oracle's
-  * `list_sum(list_transform(...))`.
+  * — bit-identical to the `aggregate(zip_with(...))` fold (DotProductSpec
+  * pins it) and to the DuckDB oracle's `list_sum(list_transform(...))`.
+  * Backs `SimilarityFunctions.dot`.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends PairedDoubleArrayFold {

@@ -86,7 +86,7 @@ case class JaccardSimilarity(left: Expression, right: Expression)
   override def nullable: Boolean = left.nullable || right.nullable
 
   // NullType (a literal NULL) and ArrayType(NullType) (an untyped empty/
-  // all-null array literal) stay legal for A/B parity with the composed
+  // all-null array literal) stay legal, as they are for the composed
   // builtins — same whitelist rationale as NfcNormalize
   private def ok(t: DataType): Boolean = t match {
     case ArrayType(LongType, _) | ArrayType(NullType, _) | NullType => true

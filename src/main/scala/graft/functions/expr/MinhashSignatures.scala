@@ -12,12 +12,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
   * (graft.functions.DedupFunctions.minhashSignatureFromPairs) with a single
   * codegen'd tokens × hashes loop.
   *
-  * Bit-identical semantics: sample i = min over tokens of (h1 + i·h2) mod P,
-  * P = 4294967311 (Kirsch–Mitzenmacher construction); inputs are 32-bit
-  * non-negative halves of one md5 per token, so plain `%` equals `pmod` and
-  * i·h2 cannot overflow a long for any realistic numHashes. An empty token
-  * array yields an array of nulls, exactly like `array_min` over an empty
-  * array (and like the DuckDB oracle's `list_min`).
+  * Bit-identical to the composed form
+  * `array_min(transform(pairs, p => pmod(p.h1 + i·p.h2, P)))` per sample i,
+  * P = 4294967311 (Kirsch–Mitzenmacher construction; MinhashSignaturesSpec
+  * pins it). The mod is a floor mod, as `pmod` is; the engine's inputs are
+  * 32-bit non-negative halves of one md5 per token, so i·h2 cannot overflow
+  * a long for any realistic numHashes. Like `array_min`, a term is skipped
+  * when its element is null or has a null field, and a sample with no
+  * non-null term is null — so an empty token array yields an array of nulls
+  * (as the DuckDB oracle's `list_min` does). A null pairs array yields null.
   */
 case class MinhashSignatures(child: Expression, numHashes: Int)
     extends UnaryExpression {
@@ -37,22 +40,28 @@ case class MinhashSignatures(child: Expression, numHashes: Int)
   override def nullSafeEval(input: Any): Any = {
     val pairs = input.asInstanceOf[ArrayData]
     val n = pairs.numElements()
-    if (n == 0) return new GenericArrayData(new Array[Any](numHashes))
     val mins = Array.fill(numHashes)(Long.MaxValue)
+    var seen = false
     var i = 0
     while (i < n) {
-      val row = pairs.getStruct(i, 2)
-      val h1 = row.getLong(0)
-      val h2 = row.getLong(1)
-      var j = 0
-      while (j < numHashes) {
-        val v = (h1 + j * h2) % P
-        if (v < mins(j)) mins(j) = v
-        j += 1
+      if (!pairs.isNullAt(i)) {
+        val row = pairs.getStruct(i, 2)
+        if (!row.isNullAt(0) && !row.isNullAt(1)) {
+          seen = true
+          val h1 = row.getLong(0)
+          val h2 = row.getLong(1)
+          var j = 0
+          while (j < numHashes) {
+            val v = java.lang.Math.floorMod(h1 + j * h2, P)
+            if (v < mins(j)) mins(j) = v
+            j += 1
+          }
+        }
       }
       i += 1
     }
-    new GenericArrayData(mins.map(Long.box): Array[Any])
+    if (seen) new GenericArrayData(mins.map(Long.box): Array[Any])
+    else new GenericArrayData(new Array[Any](numHashes))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -65,24 +74,29 @@ case class MinhashSignatures(child: Expression, numHashes: Int)
       val h2 = ctx.freshName("h2")
       val v = ctx.freshName("v")
       val mins = ctx.freshName("mins")
+      val seen = ctx.freshName("seen")
       val out = ctx.freshName("out")
       val rowCls = classOf[InternalRow].getName
       val gadCls = classOf[GenericArrayData].getName
       s"""
          |int $n = $x.numElements();
          |Object[] $out = new Object[$numHashes];
-         |if ($n > 0) {
-         |  long[] $mins = new long[$numHashes];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $rowCls $row = $x.getStruct($i, 2);
-         |    long $h1 = $row.getLong(0);
-         |    long $h2 = $row.getLong(1);
-         |    for (int $j = 0; $j < $numHashes; $j++) {
-         |      long $v = ($h1 + $j * $h2) % ${P}L;
-         |      if ($v < $mins[$j]) $mins[$j] = $v;
-         |    }
+         |long[] $mins = new long[$numHashes];
+         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
+         |boolean $seen = false;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if ($x.isNullAt($i)) continue;
+         |  $rowCls $row = $x.getStruct($i, 2);
+         |  if ($row.isNullAt(0) || $row.isNullAt(1)) continue;
+         |  $seen = true;
+         |  long $h1 = $row.getLong(0);
+         |  long $h2 = $row.getLong(1);
+         |  for (int $j = 0; $j < $numHashes; $j++) {
+         |    long $v = java.lang.Math.floorMod($h1 + $j * $h2, ${P}L);
+         |    if ($v < $mins[$j]) $mins[$j] = $v;
          |  }
+         |}
+         |if ($seen) {
          |  for (int $j = 0; $j < $numHashes; $j++) $out[$j] = (Long) $mins[$j];
          |}
          |${ev.value} = new $gadCls($out);

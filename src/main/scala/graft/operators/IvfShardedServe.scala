@@ -69,10 +69,10 @@ object IvfShardedServe {
     * bucketed-by-cell table; the gate keeps it a derived view.
     */
   def buildPostings(emb: DataFrame, bBits: Int): DataFrame = {
-    import graft.functions.SimilarityFunctions.{dotAuto, toDouble}
+    import graft.functions.SimilarityFunctions.{dot, toDouble}
     emb.withColumn("cell", cellColumn(col("embedding"), col("label"), bBits))
       .withColumn("nrm",
-        sqrt(dotAuto(toDouble(col("embedding")), toDouble(col("embedding")))))
+        sqrt(dot(toDouble(col("embedding")), toDouble(col("embedding")))))
   }
 
   /** Per-cell mean vectors, computed DISTRIBUTED but DETERMINISTIC: one
@@ -120,18 +120,13 @@ object IvfShardedServe {
     // demoted scan may SPLIT files and break cell-partition locality)
     val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevAuto = s.conf.getOption(autoKey)
-    val (input, alignedUsed) = try {
+    try {
       s.conf.set(autoKey, "false")
-      val (in, aligned) = centroidBuildInput(postings)
-      (materializeCentroids(in), aligned)
+      materializeCentroids(centroidBuildInput(postings)._1)
     } finally prevAuto match {
       case Some(v) => s.conf.set(autoKey, v)
       case None => s.conf.unset(autoKey)
     }
-    if (sys.env.contains("GRAFT_REPLAY_DEBUG"))
-      System.err.println(s"[ivf] centroid build path: " +
-        (if (alignedUsed) "bucket-aligned (no exchange)" else "shuffle fallback"))
-    input
   }
 
   /** The deterministic per-cell sequential accumulation + collect — shared
@@ -282,13 +277,13 @@ object IvfShardedServe {
   def serveProbed(probes: DataFrame, postings: DataFrame, k: Int,
                   watermarkDelay: String = "1 second",
                   windowSize: String = "1 second"): DataFrame = {
-    import graft.functions.SimilarityFunctions.{dotAuto, toDouble}
+    import graft.functions.SimilarityFunctions.{dot, toDouble}
     val wm = probes.withWatermark("ts", watermarkDelay)
     val cand = wm.join(postings.hint("shuffle_hash"),
         wm("probe_cell") === postings("cell") &&
           postings("vec_id") =!= wm("query_id"), "inner")
       .select(wm("ts"), wm("query_id"),
-        nanvl(dotAuto(toDouble(wm("qv")), toDouble(postings("embedding"))) /
+        nanvl(dot(toDouble(wm("qv")), toDouble(postings("embedding"))) /
           (wm("qn") * postings("nrm")), lit(0.0)).as("cosine"),
         postings("vec_id").as("neighbor_id"))
     cand.groupBy(window(col("ts"), windowSize), col("query_id"))

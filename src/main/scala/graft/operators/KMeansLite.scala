@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftops.Bridge
 
 /** Distributed k-means over fixed-width double vectors — the learned coarse
   * quantizer for the IVF search path (q44 uses label cells; this trains real
@@ -20,15 +21,25 @@ import org.apache.spark.sql.functions._
   *    (scaled-integer or sorted sums) at real cost per iteration.
   *
   * Execution shape: centroids live on the driver (k·dims doubles — same
-  * approach as Spark MLlib KMeans) and enter the plan as literals, so each
+  * approach as Spark MLlib KMeans) and enter the plan as the referenced
+  * object of ONE native argmin expression (expr.ArgminSqDist), so each
   * iteration is ONE distributed pass: a codegen'd argmin projection + one
   * hash-agg shuffle for the per-dim means. Dataset size never hits the driver.
+  * The generated source is identical across iterations, so the codegen cache
+  * compiles the assignment once per fit instead of once per iteration, as a
+  * k·dims literal tree would (−11% to −41% warm across the k-means family,
+  * OPTIMIZATION_r20.md C2); ArgminSqDistSpec pins bit-equality to that
+  * literal struct-argmin form.
   */
 object KMeansLite {
 
+  /** Index of the nearest centroid by squared L2, lowest index on ties. */
+  private def argmin(vec: Column, cents: Array[Array[Double]]): Column =
+    Bridge.column(graft.functions.expr.ArgminSqDist(Bridge.expression(vec), cents))
+
   /** @return (assignments DataFrame (idCol, cluster), final centroids) */
   def fit(df: DataFrame, idCol: String, vecCol: String,
-          k: Int, dims: Int, iters: Int): (DataFrame, Array[Array[Double]]) = {
+          k: Int, iters: Int): (DataFrame, Array[Array[Double]]) = {
     val vecs = df.select(col(idCol), col(vecCol))
     var centroids: Array[Array[Double]] = vecs.orderBy(col(idCol)).limit(k)
       .collect().map(_.getSeq[Any](1).map {
@@ -36,39 +47,7 @@ object KMeansLite {
         case d: Double => d
       }.toArray)
 
-    def assignExpr = {
-      // Native path (r20, VERDICT r19 item 4): ONE expression holding the
-      // centroids as a referenced object — per-iteration plans share one
-      // compiled codegen stage instead of re-analyzing + re-compiling a
-      // k·dims literal tree each loop (ArgminSqDist's doc has the full
-      // argument; ArgminSqDistSpec pins bit-equality to the literal form).
-      if (!sys.env.contains("GRAFT_KMEANS_LITERALS") &&
-          !sys.env.contains("GRAFT_KMEANS_UNROLL")) {
-        import org.apache.spark.sql.graftops.Bridge
-        Bridge.column(graft.functions.expr.ArgminSqDist(
-          Bridge.expression(col(vecCol).cast("array<double>")), centroids))
-      } else {
-      // literal-tree forms (GRAFT_KMEANS_LITERALS / GRAFT_KMEANS_UNROLL A/B
-      // baselines): argmin over k (distance, cid) structs; struct ordering =
-      // (d, cid) asc. Distance as a higher-order fold over the literal
-      // centroid array — the k·dims unrolled expression tree blows past
-      // codegen/JIT method limits (same lesson as
-      // SimilarityFunctions.withNormalized).
-      val scored = (0 until centroids.length).map { c =>
-        val cv = array(centroids(c).map(lit): _*)
-        val d =
-          if (sys.env.contains("GRAFT_KMEANS_UNROLL"))
-            (0 until dims).map { i =>
-              val x = element_at(col(vecCol), i + 1).cast("double") - lit(centroids(c)(i))
-              x * x
-            }.reduce(_ + _)
-          else
-            graft.functions.SimilarityFunctions.sqDist(col(vecCol), cv)
-        struct(d.as("d"), lit(c).as("cid"))
-      }
-      array_min(array(scored: _*)).getField("cid")
-      }
-    }
+    def assignExpr = argmin(col(vecCol).cast("array<double>"), centroids)
 
     for (_ <- 1 to iters) {
       val assigned = vecs.withColumn("__c", assignExpr)
@@ -148,24 +127,10 @@ object KMeansLite {
     var books: Array[Array[Array[Double]]] =
       Array.tabulate(m)(mm => initRows.map(_.slice(mm * sub, (mm + 1) * sub)))
 
-    def codeExpr(mm: Int) = {
-      val sliced = transform(slice(col(vecCol), mm * sub + 1, sub), x => x.cast("double"))
-      // same native/literal split as fit's assignExpr (one compiled stage per
-      // iteration loop instead of m·k·sub fresh literals per iteration)
-      if (!sys.env.contains("GRAFT_KMEANS_LITERALS") &&
-          !sys.env.contains("GRAFT_KMEANS_UNROLL")) {
-        import org.apache.spark.sql.graftops.Bridge
-        Bridge.column(graft.functions.expr.ArgminSqDist(
-          Bridge.expression(sliced), books(mm)))
-      } else {
-      val scored = (0 until books(mm).length).map { c =>
-        val cv = array(books(mm)(c).map(lit): _*)
-        val d = graft.functions.SimilarityFunctions.sqDist(sliced, cv)
-        struct(d.as("d"), lit(c).as("cid"))
-      }
-      array_min(array(scored: _*)).getField("cid")
-      }
-    }
+    // same native argmin as fit's assignExpr: one compiled stage per
+    // iteration loop instead of m·k·sub fresh literals per iteration
+    def codeExpr(mm: Int) = argmin(
+      transform(slice(col(vecCol), mm * sub + 1, sub), x => x.cast("double")), books(mm))
     def codesLong = vecs.select(col(idCol), col(vecCol),
       posexplode(array((0 until m).map(mm => codeExpr(mm)): _*)).as(Seq("m", "code")))
 

@@ -506,12 +506,13 @@ object StatefulOps {
     * the RocksDB provider — its point is large-state operation with
     * changelog checkpointing). Same contract and output as [[mapStateful]].
     *
-    * Measured guidance (StatefulApiScale, BASELINE.md r8): at equal
-    * provider the API choice does NOT move throughput (TWS 539k vs fMGWS
-    * 520k rows/s at 200 keys; 318k vs 332k at 1M keys on RocksDB) — choose
-    * this variant for its API surface (explicit timers, multiple named
-    * state variables, state TTL config, RocksDB alignment), not for speed;
-    * the provider decision stays the StateScale/BASELINE guidance.
+    * Measured guidance (BASELINE.md "Round 8: fMGWS vs transformWithState
+    * A/B"): at equal provider the API choice does NOT move throughput (TWS
+    * 539k vs fMGWS 520k rows/s at 200 keys; 318k vs 332k at 1M keys on
+    * RocksDB) — choose this variant for its API surface (explicit timers,
+    * multiple named state variables, state TTL config, RocksDB alignment),
+    * not for speed; the provider decision stays the BASELINE.md
+    * "Round 4: state-store A/B at large state" guidance.
     */
   def mapStatefulTws[K, V, S, O](
       ds: Dataset[V], keyFn: V => K, ttlMillis: Long,

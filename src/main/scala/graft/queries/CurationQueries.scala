@@ -824,16 +824,13 @@ object CurationQueries {
     // reuse does not fire across the broadcast-subquery boundary — measured
     // r19: without the checkpoint the gram pass ran per consumer. The
     // intermediate is (docs × ≤1024)-bounded — orders of magnitude smaller
-    // than the exploded gram stream it replaces.
-    // r20 A/B lever (VERDICT r19 item 2: the driver read q120 SLOWER after
-    // the eager checkpoint landed): GRAFT_Q120_CKPT = eager | lazy | none.
-    val docBucketAgg = grams.groupBy($"doc_id", $"lang", $"bucket")
+    // than the exploded gram stream it replaces. Eager, not lazy or none:
+    // the three sit within warm noise at sf0.1, and "none" re-runs the gram
+    // pass once per consumer — a full corpus scan each at scale
+    // (OPTIMIZATION_r20.md C5).
+    val docBucket0 = grams.groupBy($"doc_id", $"lang", $"bucket")
       .agg(count(lit(1)).as("c"))
-    val docBucket0 = sys.env.getOrElse("GRAFT_Q120_CKPT", "eager") match {
-      case "none" => docBucketAgg
-      case "lazy" => docBucketAgg.localCheckpoint(false)
-      case _ => docBucketAgg.localCheckpoint(true)
-    }
+      .localCheckpoint(true)
     val docBucket = docBucket0.select($"doc_id", $"bucket", $"c")
     val feat = docBucket0.groupBy($"bucket").agg(
       sum($"c").as("craw"),

@@ -121,7 +121,7 @@ object EmbeddingQueries {
       .orderBy(round($"cosine", 9).desc, $"neighbor_id".asc)
     cands.join(broadcast(queries), Seq("bucket"))
       .filter($"neighbor_id" =!= $"query_id")
-      .select($"query_id", $"neighbor_id", S.dotAuto($"qv", $"cv").as("cosine"))
+      .select($"query_id", $"neighbor_id", S.dot($"qv", $"cv").as("cosine"))
       .withColumn("rank", row_number().over(w))
       .filter($"rank" <= 3)
       .select($"query_id", $"rank", $"neighbor_id", round($"cosine", 6).as("cosine"))
@@ -196,7 +196,7 @@ object EmbeddingQueries {
     val b = emb.select($"bucket", $"vec_id".as("vec_b"), $"nv".as("vb"))
     a.join(b, Seq("bucket"))
       .filter($"vec_a" < $"vec_b")
-      .select($"vec_a", $"vec_b", S.dotAuto($"va", $"vb").as("cosine"))
+      .select($"vec_a", $"vec_b", S.dot($"va", $"vb").as("cosine"))
       // threshold on the ROUNDED score: pair inclusion is a binary decision
       // output rounding can't repair if the raw cosine straddles the cut
       .filter(round($"cosine", 6) >= 0.35)
@@ -256,7 +256,7 @@ object EmbeddingQueries {
       .orderBy(round($"cos_c", 9).desc, $"label".asc)
     val probe = queries.join(broadcast(centroids))
       .select($"query_id", $"qv", $"label",
-        (S.dotAuto($"qv", $"cv") / S.norm($"cv")).as("cos_c"))
+        (S.dot($"qv", $"cv") / S.norm($"cv")).as("cos_c"))
       .withColumn("rn", row_number().over(wProbe)).filter($"rn" <= probes)
       .select($"query_id", $"qv", $"label".as("probe_label"), $"rn".as("probe_rn"))
     // exact score within the probed cells only (both sides unit-length → dot);
@@ -264,7 +264,7 @@ object EmbeddingQueries {
     S.withNormalized(emb.select($"vec_id".as("neighbor_id"), $"embedding", $"label"),
         "embedding", "cv")
       .join(broadcast(probe), $"label" === $"probe_label" && $"neighbor_id" =!= $"query_id")
-      .select($"query_id", $"neighbor_id", S.dotAuto($"qv", $"cv").as("cosine"), $"probe_rn")
+      .select($"query_id", $"neighbor_id", S.dot($"qv", $"cv").as("cosine"), $"probe_rn")
   }
 
   /** Per-query top-3 by exact cosine over an ivfScored frame (quantized
@@ -355,7 +355,7 @@ object EmbeddingQueries {
     import s.implicits._
     val vecs = t(s, dir, "embeddings").select($"vec_id", S.toDouble($"embedding").as("ve"))
     val (assigned, cents) = graft.operators.KMeansLite.fit(
-      vecs, "vec_id", "ve", k = 8, dims = dims, iters = 2)
+      vecs, "vec_id", "ve", k = 8, iters = 2)
     val norms = cents.zipWithIndex.map { case (cv, c) =>
       // same sequential sum order as the oracle's list_sum -> bit-identical
       val norm = math.sqrt(cv.foldLeft(0.0)((acc, x) => acc + x * x))
@@ -728,7 +728,7 @@ object EmbeddingQueries {
     val fitInput =
       if (sampleMod <= 1L) vecs else vecs.filter(pmod($"vec_id", lit(sampleMod)) === 0)
     val (_, cents) = graft.operators.KMeansLite.fit(
-      fitInput, "vec_id", "ve", k = k1, dims = dims, iters = 2)
+      fitInput, "vec_id", "ve", k = k1, iters = 2)
     // one kernel pass emits the COMPOSITE cell (coarse argmin + centered
     // sign-bit split) — same per-row work as KMeansLite.assign plus subBits
     // compares, and no join to route rows to their centroid
@@ -769,7 +769,7 @@ object EmbeddingQueries {
     val keep = nv.select($"cluster", $"vec_id".as("vid_keep"), $"nv".as("nv_keep"))
     nv.join(keep, Seq("cluster"))
       .filter($"vid_keep" < $"vec_id")
-      .filter(round(S.dotAuto($"nv", $"nv_keep"), 6) >= 0.35)
+      .filter(round(S.dot($"nv", $"nv_keep"), 6) >= 0.35)
       .groupBy($"cluster", $"vec_id")
       .agg(count(lit(1)).as("n_dup_partners"), min($"vid_keep").as("kept_vec_id"))
   }
@@ -784,7 +784,7 @@ object EmbeddingQueries {
     val emb = t(s, dir, "embeddings")
     val vecs = emb.select($"vec_id", S.toDouble($"embedding").as("ve"))
     val (assigned, _) = graft.operators.KMeansLite.fit(
-      vecs, "vec_id", "ve", k = k, dims = dims, iters = 2)
+      vecs, "vec_id", "ve", k = k, iters = 2)
     // normalize once per row before the pair join (q39's recipe): per-pair
     // cost is one native dot product
     semanticDedupPairs(s, emb, assigned)
@@ -1195,7 +1195,7 @@ object EmbeddingQueries {
     val cn = S.withNormalized(vecs.filter($"lang" =!= "en")
       .select($"vec_id".as("cid"), $"embedding".as("__c")), "__c", "cv").drop("__c")
     val scored = cn.crossJoin(broadcast(qn))
-      .select($"qid", $"cid", round(S.dotAuto($"qv", $"cv"), 9).as("cos"))
+      .select($"qid", $"cid", round(S.dot($"qv", $"cv"), 9).as("cos"))
     def knnMean(key: String, other: String, out: String) = scored
       .withColumn("r", row_number().over(Window.partitionBy(col(key))
         .orderBy($"cos".desc, col(other).asc)))

@@ -16,12 +16,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A PACED low-latency rate source with emission-time timestamps — the
   * instrument Spark's built-in rate source cannot provide in its
-  * event-at-a-time modes. Measured on this box (graft.ContProbe): the
-  * built-in continuous rate reader free-runs (42 M rows generated in 12 s at
-  * a configured 10 k rows/s) and stamps every row with the STREAM START
-  * time, so `now − timestamp` measures elapsed-since-start, not event
-  * latency — the r9 latency probe's first run read a saturated 20 s at every
-  * percentile because of it.
+  * event-at-a-time modes. Measured (BASELINE.md "Round 9: sub-100 ms
+  * latency probe"): the built-in continuous rate reader free-runs (42 M
+  * rows generated in 12 s at a configured 10 k rows/s) and stamps every row
+  * with the STREAM START time, so `now − timestamp` measures
+  * elapsed-since-start, not event latency — the r9 latency probe's first run
+  * read a saturated 20 s at every percentile because of it.
   *
   * The source supports BOTH of Spark's event-at-a-time execution paths
   * through the public DSv2 interfaces:

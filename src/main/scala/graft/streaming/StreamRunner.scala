@@ -223,12 +223,6 @@ object StreamRunner {
     val chunkCount = sys.env.get("SPARK_GRAFT_REPLAY_CHUNKS")
       .map(_.toInt).getOrElse(chunks)
     val name = s"graft_freplay_${counter.incrementAndGet()}"
-    val debug = sys.env.contains("GRAFT_REPLAY_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(phase: String): Unit = if (debug) {
-      System.err.println(f"[replay $name] $phase ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      t0 = System.nanoTime()
-    }
     def stage(): String = {
       val dir = java.nio.file.Files.createTempDirectory("graft_freplay_base_").toString + "/in"
       input.repartitionByRange(chunkCount, col(tsCol))
@@ -306,7 +300,6 @@ object StreamRunner {
         }
         (dst.toString, Some(work))
       }
-    lap("write-chunks")
     // sentinel placement needs max(ts); the chunk files are already written and
     // range-partitioned ascending, so the LAST chunk alone carries the maximum
     // — a ts-only columnar scan of one chunk dir, not a rescan of the source
@@ -361,9 +354,7 @@ object StreamRunner {
         spark.conf.set("spark.sql.shuffle.partitions", prevParts)
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
       }
-    lap("start")
     try q.processAllAvailable() finally q.stop()
-    lap("process-all")
     // the memory sink holds the result rows; a tail-extended run's private
     // copy and any uncacheable (in-memory-input) staging are done — delete
     // them. A shared file-backed staging stays for the JVM: later replays of

@@ -115,6 +115,30 @@ object Bridge {
       scans.head.relation.bucketSpec.exists(_.bucketColumnNames == Seq(colName))
   }
 
+  /** Split count of the file scans feeding `df`, summed over every scan that
+    * is not a broadcast build side — read off the physical plan without
+    * running a job. For a scan-rooted frame (no exchange) this is exactly
+    * `df.rdd.getNumPartitions`, which on an AQE plan holding an exchange
+    * would execute the shuffle stages to learn the final partition count.
+    * None when no file scan feeds the frame.
+    */
+  def scanPartitions(df: org.apache.spark.sql.DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case _: BroadcastExchangeExec => Nil
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.inputPlan
+      case p => p
+    }
+    val found = scans(plan)
+    if (found.isEmpty) None else Some(found.map(_.inputRDD.getNumPartitions).sum)
+  }
+
   /** The file-source root paths under a DataFrame's analyzed plan — the part
     * of the input identity that plan CANONICALIZATION erases (a parquet
     * LogicalRelation renders as `Relation [cols] parquet` with no path, and

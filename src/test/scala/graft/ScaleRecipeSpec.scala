@@ -139,7 +139,7 @@ class ScaleRecipeSpec extends SparkSpec {
     val vecs = Tables(spark, sf, "embeddings")
       .select(col("vec_id"), S.toDouble(col("embedding")).as("ve"))
     val (assigned, cents) = graft.operators.KMeansLite.fit(
-      vecs, "vec_id", "ve", k = 8, dims = 64, iters = 2)
+      vecs, "vec_id", "ve", k = 8, iters = 2)
     val catalyst = assigned.collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val kernel = graft.operators.KMeansLite.assign(vecs, "vec_id", "ve", cents)
@@ -176,7 +176,7 @@ class ScaleRecipeSpec extends SparkSpec {
       .join(nv.select(col("vec_id"), col("nv")), Seq("vec_id"))
       .join(nv.select(col("vec_id").as("kept_vec_id"), col("nv").as("nv2")),
         Seq("kept_vec_id"))
-      .select(round(S.dotAuto(col("nv"), col("nv2")), 6).as("cos"))
+      .select(round(S.dot(col("nv"), col("nv2")), 6).as("cos"))
       .collect()
     assert(pairs.forall(_.getDouble(0) >= 0.35),
       "two-level reported a pair below the 0.35 dedup threshold")

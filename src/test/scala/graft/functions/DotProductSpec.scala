@@ -3,9 +3,9 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The native DotProduct expression must be bit-identical to the fold form
-  * (and therefore to the DuckDB oracle) on both the interpreted and codegen
-  * paths.
+/** `SimilarityFunctions.dot` (the native DotProduct expression) must be
+  * bit-identical to the fold reference (ComposedForms.dot, and therefore to
+  * the DuckDB oracle) on both the interpreted and codegen paths.
   */
 class DotProductSpec extends SparkSpec {
 
@@ -18,8 +18,8 @@ class DotProductSpec extends SparkSpec {
     }
     val df = data.toDF("id", "a", "b")
     val out = df.select(
-      SimilarityFunctions.dotNative($"a", $"b").as("native"),
-      SimilarityFunctions.dot($"a", $"b").as("fold")).collect()
+      SimilarityFunctions.dot($"a", $"b").as("native"),
+      ComposedForms.dot($"a", $"b").as("fold")).collect()
     out.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
              java.lang.Double.doubleToLongBits(r.getDouble(1)))
@@ -30,7 +30,7 @@ class DotProductSpec extends SparkSpec {
     // literal inputs constant-fold to a LocalTableScan, so use a file scan
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(SimilarityFunctions.toDouble(col("embedding")).as("v"))
-    val df = emb.select(SimilarityFunctions.dotNative(col("v"), col("v")).as("d"))
+    val df = emb.select(SimilarityFunctions.dot(col("v"), col("v")).as("d"))
     val n = df.count()
     assert(n > 0 && df.collect().forall(_.getDouble(0) >= 0.0)) // v·v ≥ 0
     val plan = df.queryExecution.executedPlan.toString
@@ -40,16 +40,16 @@ class DotProductSpec extends SparkSpec {
 
   test("null array propagates null") {
     val df = Seq((Some(Array(1.0)), Option.empty[Array[Double]])).toDF("a", "b")
-      .select(SimilarityFunctions.dotNative(col("a"), col("b")).as("d"))
+      .select(SimilarityFunctions.dot(col("a"), col("b")).as("d"))
     assert(df.collect().head.isNullAt(0))
   }
 
   test("null ELEMENT returns null, matching the fold (no silent zero)") {
     val df = Seq((Seq(Some(1.0), None, Some(2.0)), Seq(Some(1.0), Some(1.0), Some(1.0))))
       .toDF("a", "b")
-    val native = df.select(SimilarityFunctions.dotNative(col("a"), col("b")).as("d"))
+    val native = df.select(SimilarityFunctions.dot(col("a"), col("b")).as("d"))
       .collect().head
-    val fold = df.select(SimilarityFunctions.dot(col("a"), col("b")).as("d"))
+    val fold = df.select(ComposedForms.dot(col("a"), col("b")).as("d"))
       .collect().head
     assert(native.isNullAt(0) && fold.isNullAt(0))
   }

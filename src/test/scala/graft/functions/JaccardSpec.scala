@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** The native one-pass `graft_jaccard` must be bit-identical to the composed
-  * `size(array_intersect)/size(array_union)` reference on every input shape
-  * the LSH verify step can produce — duplicates, empties, skewed sizes, and
-  * null elements (SQL set semantics: null counts once, intersects only if
-  * present on both sides).
+  * `size(array_intersect)/size(array_union)` reference (ComposedForms.jaccard)
+  * on every input shape the LSH verify step can produce — duplicates,
+  * empties, skewed sizes, and null elements (SQL set semantics: null counts
+  * once, intersects only if present on both sides).
   */
 class JaccardSpec extends SparkSpec {
 
@@ -20,7 +20,7 @@ class JaccardSpec extends SparkSpec {
     val prop = Prop.forAll(arrGen, arrGen) { (a, b) =>
       val row = Seq((a, b)).toDF("a", "b")
         .select(DedupFunctions.jaccard($"a", $"b").as("n"),
-          DedupFunctions.jaccardComposed($"a", $"b").as("c"))
+          ComposedForms.jaccard($"a", $"b").as("c"))
         .collect().head
       row.getDouble(0) == row.getDouble(1)
     }
@@ -43,18 +43,18 @@ class JaccardSpec extends SparkSpec {
     assert(df.getDouble(1) === 0.0)
     assert(df.getDouble(2) === 0.0)
     assert(df.isNullAt(3))
-    // an untyped NULL literal must stay analyzable (A/B parity with the
-    // composed baseline) and evaluate to NULL
+    // an untyped NULL literal must stay analyzable (as it is in the
+    // composed reference) and evaluate to NULL
     assert(df.isNullAt(4))
   }
 
   test("composed A/B baseline propagates NULL arrays like the native form") {
     val row = Seq((null: Array[java.lang.Long], Array[java.lang.Long](1L)))
       .toDF("a", "b")
-      .select(DedupFunctions.jaccardComposed($"a", $"b").as("c"),
+      .select(ComposedForms.jaccard($"a", $"b").as("c"),
         DedupFunctions.jaccard($"a".cast("array<bigint>"), $"b".cast("array<bigint>")).as("n"))
       .collect().head
     assert(row.isNullAt(0) && row.isNullAt(1),
-      "GRAFT_JACCARD_FOLD A/B must be semantics-preserving on NULL arrays")
+      "native and composed jaccard must both map NULL arrays to NULL")
   }
 }

@@ -81,15 +81,14 @@ class ArgminSqDistSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.codegen.fallback", prev)
   }
 
-  test("KMeansLite.fit native path == GRAFT_KMEANS_LITERALS trajectory (same fixture)") {
-    // the env toggle can't be flipped inside one JVM run; instead pin that
-    // fit's NATIVE assignment reproduces the literal argmin column applied to
-    // the SAME final centroids — the per-iteration means then agree because
-    // they are a deterministic function of assignments (8-dp rounded avgs)
+  test("KMeansLite.fit native path == literal struct-argmin trajectory (same fixture)") {
+    // fit's NATIVE assignment must reproduce the literal argmin column
+    // applied to the SAME final centroids — the per-iteration means then
+    // agree because they are a deterministic function of assignments (8-dp
+    // rounded avgs)
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val dims = emb.select(size($"embedding")).head.getInt(0)
     val (assigned, cents) = KMeansLite.fit(emb, "vec_id", "embedding",
-      k = 4, dims = dims, iters = 2)
+      k = 4, iters = 2)
     val lit0 = emb.select($"vec_id",
       literalArgmin($"embedding", cents).as("cluster_lit"))
     val joined = assigned.join(lit0, "vec_id").collect()

@@ -31,13 +31,13 @@ class ShardedAnnServeSpec extends SparkSpec {
       .select($"vec_id", $"embedding", $"label")
       .filter($"vec_id" % 40 === 1)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-    import graft.functions.SimilarityFunctions.{dotAuto, toDouble}
-    val qn = sqrt(dotAuto(toDouble($"qv"), toDouble($"qv")))
+    import graft.functions.SimilarityFunctions.{dot, toDouble}
+    val qn = sqrt(dot(toDouble($"qv"), toDouble($"qv")))
     import org.apache.spark.sql.expressions.Window
     q.withColumn("qn", qn)
       .crossJoin(broadcast(centDf))
-      .withColumn("c", dotAuto(toDouble($"qv"), toDouble($"cv")) /
-        ($"qn" * sqrt(dotAuto($"cv", $"cv"))))
+      .withColumn("c", dot(toDouble($"qv"), toDouble($"cv")) /
+        ($"qn" * sqrt(dot($"cv", $"cv"))))
       .withColumn("rn", row_number().over(Window.partitionBy($"query_id")
         .orderBy(round($"c", 9).desc, $"cell".asc)))
       .filter($"rn" <= 2)

@@ -72,7 +72,7 @@ class ContinuousEquivalenceSpec extends SparkSpec {
 
   test("PacedRateSource paces to the configured rate and stamps emission time") {
     // the built-in continuous rate source free-runs with a constant start
-    // timestamp (graft.ContProbe measurement) — the paced DSv2 source exists
+    // timestamp (BASELINE.md round-9 measurement) — the paced DSv2 source exists
     // because of that; this pins the two properties the latency probe needs
     ContinuousCollector.rows.clear()
     val ckpt = java.nio.file.Files.createTempDirectory("graft_paced_").toString
