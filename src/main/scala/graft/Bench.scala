@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.trace.QueryTrace
+
 /** Benchmark main — runs every registered query on SPARK_GRAFT_SF_DIR and prints
   * one JSON line. Each query is forced to full materialization via a noop-format
   * write (a bare `count()` would let Catalyst prune most of the work and
@@ -17,310 +19,13 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  /** Frozen PER-COMPONENT references for the calibration probe (seconds of
-    * fixed work each). The COMPOSITE anchor is unchanged from r14 — 7.49
-    * r14-reference-box seconds — so `queries_norm` keeps its unit and
-    * cross-round normalized ratios stay comparable. The r15 change
-    * (VERDICT r14 item 1) is the per-component SPLIT, needed so component
-    * factors can name which probe moved: the split is the r14 freeze box's
-    * recorded per-component values (BASELINE.md "calibration probe, final
-    * shape": cpu ~0.87 / shuffle ~0.70 / sched ~1.9 / state ~3.9), with
-    * shuffle nudged 0.70 → 0.75 for the min-of-3 → median-of-5 stat change
-    * (idle-box median sits ~5-10% above the min; measured in the r15
-    * re-freeze runs, BASELINE.md) and the residual rounding placed in
-    * sched/state within their recorded precision. A small constant bias in
-    * one component's ref is harmless — component factors diagnose which
-    * component MOVED, not absolute speed. Re-freeze ONLY with a BASELINE.md
-    * entry explaining why (a probe change or a deliberate re-baselining),
-    * never to make a round look faster. History: 7.37 → 7.49 in-round r14
-    * (probe shape), → r15 per-component split + shuffle median (this entry).
-    */
-  val CalibrationRef: Map[String, Double] = Map(
-    "cpu_sec" -> 0.87, "shuffle_sec" -> 0.75,
-    "sched_sec" -> 1.92, "state_sec" -> 3.95)
-  val CalibrationRefComposite: Double = CalibrationRef.values.sum
-
-  /** Two same-run probe composites must agree within this band for the
-    * factor to be APPLIED (VERDICT r14 item 1): the probe's own idle-box
-    * spread is ±4%, so a pre/post pair further apart than 5% means the box
-    * shifted DURING the suite (or the probe hit transient load) and
-    * normalizing with either value would add noise — the artifact then
-    * records `factor_stable:false` and `queries_norm` falls back to raw.
-    */
-  val CalibrationAgreementBand = 0.05
-
-  /** One settled probe SIDE (shared by Bench's pre/post pair and MaxRate):
-    * repeat [[calibrate]] until two consecutive composites agree within
-    * [[CalibrationAgreementBand]] (≤3 extra attempts) — right after sbt
-    * launch + compile, or right after a full query suite, the box carries
-    * decaying transients for ~a probe's length, and a single-shot probe
-    * taken then reads 5-25% above the true environment (measured in the r15
-    * re-freeze: launch-adjacent 8.17 settling to 4.81 over two repeats).
-    * The side's value is the COMPONENT-WISE MIN across all of its probe
-    * executions (already paid for): on fixed work every disturbance —
-    * transient load, cold code, GC — inflates and never deflates, so the
-    * min is the side's best estimate of undisturbed box capacity, and a far
-    * stabler statistic than any single execution (measured: single settled
-    * composites 4.42-5.12 across r15 runs; side-mins 4.42-4.83).
-    */
-  private[graft] def settledCalibrate(spark: SparkSession, tag: String): Map[String, Double] = {
-    def log(t: String, c: Map[String, Double]): Unit =
-      System.err.println(f"[bench] calibration($t) composite=${c.values.sum}%.3f s " +
-        f"(ref ${CalibrationRefComposite}%.2f) " +
-        c.toSeq.sortBy(_._1).map { case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-    val runs = scala.collection.mutable.ArrayBuffer(calibrate(spark))
-    log(tag, runs.head)
-    var attempts = 0
-    var settled = false
-    while (!settled && attempts < 3) {
-      val cur = calibrate(spark)
-      log(s"$tag-settle${attempts + 1}", cur)
-      val (a, b) = (runs.last.values.sum, cur.values.sum)
-      settled = math.abs(a - b) / ((a + b) / 2) <= CalibrationAgreementBand
-      runs += cur
-      attempts += 1
-    }
-    val sideMin = CalibrationRef.keys.map(k => k -> runs.map(_(k)).min).toMap
-    log(s"$tag-min", sideMin)
-    sideMin
-  }
-
-  /** Untimed JVM-warm phase before the PRE calibration side (r17, VERDICT
-    * r16 task 5). All four r16 factors refused because the pre side lands on
-    * the session's warm-up decay ramp: an 8-run probe session measured the
-    * composite falling 7.18 → 5.02 monotonically, substantially JVM-local
-    * (BASELINE.md r16), so pre reads 11-23% above post all day and the
-    * agreement gate — correctly — refuses. This phase burns that ramp
-    * UNTIMED before the pre side is taken: repeat the (unchanged, frozen)
-    * [[calibrate]] probe until two consecutive composites agree within 2%
-    * or the budget lapses. Warming with the probe itself warms exactly the
-    * code paths the probe times — more targeted than a flagship-suite pass
-    * and bounded. DEFAULT ON since r20 with a 120 s budget (VERDICT r19
-    * item 8: the warm+sustain recipe produced the only-ever
-    * `factor_stable:true` pairs, so driver runs should get it without env);
-    * `SPARK_GRAFT_CALIB_WARM=0` disables, any other value overrides the
-    * budget. The phase is UNTIMED — query timing methodology is unchanged.
-    * Returns (passes, first composite, last composite) for the artifact.
-    */
-  private[graft] def calibWarm(spark: SparkSession): Option[(Int, Double, Double)] =
-    Some(sys.env.getOrElse("SPARK_GRAFT_CALIB_WARM", "120"))
-      .filter(_.toDoubleOption.forall(_ > 0)).map { v =>
-      val budget = v.toDoubleOption.filter(_ > 0).getOrElse(120.0)
-      val t0 = System.nanoTime()
-      var comps = List(calibrate(spark).values.sum)
-      System.err.println(f"[bench] calib-warm pass 1 composite=${comps.head}%.3f")
-      var done = false
-      while (!done) {
-        if ((System.nanoTime() - t0) / 1e9 >= budget) done = true
-        else {
-          val c = calibrate(spark).values.sum
-          System.err.println(f"[bench] calib-warm pass ${comps.size + 1} composite=$c%.3f")
-          val prev = comps.head
-          comps ::= c
-          if (math.abs(prev - c) / ((prev + c) / 2) <= 0.02) done = true
-        }
-      }
-      (comps.size, comps.last, comps.head)
-    }
-
-  /** The calib-warm artifact fragment ("" when the phase didn't run). */
-  private[graft] def warmJsonFragment(w: Option[(Int, Double, Double)]): String =
-    w.map { case (n, first, last) =>
-      s""""warm":{"passes":$n,"first":$first,"last":$last},"""
-    }.getOrElse("")
-
-  /** Untimed SUSTAINED-load segment between the warm phase and the PRE
-    * calibration side (r18, VERDICT r17 Next #6). The r17 lesson (recorded
-    * in BASELINE.md): warm phase + SUSTAINED load stabilized this box class
-    * — MaxRate, whose rate ladder IS minutes of saturated streaming, got the
-    * first `factor_stable:true` pair — while warm phase + the bench's BURSTY
-    * suite refused by a hair (5.26% vs the 5% band). This segment holds
-    * MaxRate's keyed tumbling-window shape at a modest rate for
-    * `SPARK_GRAFT_CALIB_SUSTAIN` seconds (default 60) so the pre side is
-    * taken from the same sustained-load regime the ladder calibrates from.
-    * DEFAULT ON since r20 at 60 s (VERDICT r19 item 8, same rationale as
-    * [[calibWarm]]); `SPARK_GRAFT_CALIB_SUSTAIN=0` disables, any other
-    * value overrides the held seconds. Untimed — methodology unchanged.
-    * Returns the held seconds for the artifact's `sustain` fragment.
-    */
-  private[graft] def calibSustain(spark: SparkSession): Option[Double] =
-    Some(sys.env.getOrElse("SPARK_GRAFT_CALIB_SUSTAIN", "60"))
-      .filter(_.toDoubleOption.forall(_ > 0)).map { v =>
-      val secs = v.toDoubleOption.filter(_ > 0).getOrElse(60.0)
-      System.err.println(f"[bench] calib-sustain: holding keyed tumbling load for $secs%.0f s")
-      val q = RateWorkloads.statefulAgg(RateWorkloads.shaped(spark, 2000000L))
-        .writeStream.format("noop").outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-        .start()
-      try Thread.sleep((secs * 1000).toLong) finally q.stop()
-      secs
-    }
-
-  /** The sustain artifact fragment ("" when the segment didn't run). */
-  private[graft] def sustainJsonFragment(s: Option[Double]): String =
-    s.map(secs => s""""sustain":{"secs":$secs},""").getOrElse("")
-
-  /** Fixed-work calibration probe (VERDICT r13 item 1): four deterministic
-    * micro-workloads that measure the BOX, not the engine —
-    *   cpu_sec:     single-thread FNV-1a over 600M steps (per-core speed and
-    *                background-load steal; pure JVM, no Spark scheduling);
-    *   shuffle_sec: 16M-row hash repartition + two-phase agg (shuffle write/
-    *                read, serialization, multicore);
-    *   sched_sec:   120 minimal 32-task jobs (the per-job scheduling floor —
-    *                the component external load multiplies 3-5× while bulk
-    *                work absorbs ~1.2×, BASELINE.md r7);
-    *   state_sec:   keyed windowed agg on one long-lived query — 3 UNTIMED
-    *                init batches, then min over 3 rounds of 6 timed batches
-    *                (per-batch state-commit floor; startup excluded).
-    *                ASSUMES java.io.tmpdir is tmpfs on this harness box
-    *                (build.sbt points it at /dev/shm when present): the
-    *                probe times state COMMITS, and on a disk-backed tmpdir
-    *                it would time fsyncs against a different floor than the
-    *                frozen reference — re-freeze before trusting factors
-    *                from a box without /dev/shm.
-    * cpu/sched/state are min-of-3: the FIRST iteration absorbs the probe's
-    * own JIT/class-init cost, which otherwise varies with how much work ran
-    * before the probe (measured: the same box read 6.3 s after an sf1-sized
-    * warmup vs 7.8-8.6 s in a fresh session — the probe must self-warm to be
-    * comparable across runs), and transients read high, never low, on fixed
-    * work. shuffle is MEDIAN-of-5 (r15): its fixture queues behind external
-    * load, so its min is stable but its single-shot values are the probe's
-    * noisiest — the median of five absorbs one or two contended trials
-    * without tracking the min's optimism. Composite = sum of the four.
-    */
-  private[graft] def calibrate(spark: SparkSession): Map[String, Double] = {
-    import spark.implicits._
-    def timeS(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def minOf3(f: => Unit): Double = Seq(timeS(f), timeS(f), timeS(f)).min
-    // the shuffle trials are logged raw: a factor swing blamed on shuffle_sec
-    // should be diagnosable from the artifact's stderr without a rerun
-    def medianOf5(f: => Unit): Double = {
-      val trials = Seq.fill(5)(timeS(f))
-      System.err.println(trials.map(t => f"$t%.3f")
-        .mkString("[bench] shuffle probe trials: ", " ", ""))
-      trials.sorted.apply(2)
-    }
-    val cpu = minOf3 {
-      var h = 0x811c9dc5L
-      var i = 0
-      while (i < 600000000) { h = (h ^ (i & 0xff)) * 0x01000193L; i += 1 }
-      if (h == 42L) System.err.println("") // defeat dead-code elimination
-    }
-    val shuffle = medianOf5 {
-      spark.range(16000000L)
-        .select((col("id") % 100000L).as("k"))
-        .repartition(32, col("k"))
-        .groupBy("k").count()
-        .write.format("noop").mode("overwrite").save()
-    }
-    val sched = minOf3 {
-      var i = 0
-      while (i < 120) { spark.sparkContext.parallelize(1 to 32, 32).count(); i += 1 }
-    }
-    // 8 state partitions (like streamThroughput): the probe tracks the
-    // per-batch COMMIT cost, so the query + state-store startup must stay
-    // OUTSIDE the timed window (3 untimed batches first) — timing it made
-    // the probe bimodal (8.2 vs 6.2 s composites on the same idle box)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // FROZEN-WORK pin (r19): the probe must measure the BOX against the same
-    // fixed workload every round, and state_sec's workload definition has
-    // always included Spark's stock checkpoint manager (whose local-FS
-    // rename path forks a readlink per commit — exactly what the r14 ref
-    // values absorbed). The r19 engine default
-    // (graft.streaming.LocalCheckpointFileManager) made state commits ~3×
-    // faster, which would DEFLATE the probe composite (measured: state_sec
-    // 3.2 → 1.1) and silently re-scale every cross-round normalized number.
-    // Pinning the probe's session conf to the stock manager keeps the frozen
-    // ruler intact; the engine improvement shows up where it belongs — in
-    // the measured queries — not hidden inside the factor.
-    val mgrKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val prevMgr = spark.conf.getOption(mgrKey)
-    spark.conf.set(mgrKey, "org.apache.spark.sql.execution.streaming." +
-      "checkpointing.FileContextBasedCheckpointFileManager")
-    val state = try {
-      implicit val sqlCtx = spark.sqlContext
-      val ms = MemoryStream[(java.sql.Timestamp, Long, Double)]
-      val q = ms.toDF().toDF("ts", "k", "v").withWatermark("ts", "1 hour")
-        .groupBy(window($"ts", "1 hour"), $"k").agg(sum($"v"))
-        .writeStream.format("noop").outputMode("update").start()
-      def feed(b: Int): Unit = {
-        ms.addData((0 until 2000).map(i =>
-          (new java.sql.Timestamp(b * 3600000L), (i % 64).toLong, i.toDouble)))
-        q.processAllAvailable()
-      }
-      try {
-        (0 until 3).foreach(feed) // untimed: query + state-store init
-        Seq.tabulate(3) { r =>
-          timeS((0 until 6).foreach(i => feed(3 + r * 6 + i)))
-        }.min
-      } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevMgr match {
-        case Some(v) => spark.conf.set(mgrKey, v)
-        case None => spark.conf.unset(mgrKey)
-      }
-    }
-    Map("cpu_sec" -> cpu, "shuffle_sec" -> shuffle,
-        "sched_sec" -> sched, "state_sec" -> state)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = math.max(4, cpus.toIntOption.getOrElse(32))
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
+    warmup(spark, sfDir)
 
-    // stream-only mode for iterating on the throughput harness: A/B both
-    // state-store providers back to back on the same fixture (warmup first so
-    // neither side pays the one-time stream-infra class-init tax)
-    if (sys.env.contains("SPARK_GRAFT_STREAM_ONLY")) {
-      streamWarmup(spark)
-      val (first, second) =
-        if (sys.env.get("SPARK_GRAFT_STREAM_ONLY").contains("rocksfirst")) (true, false)
-        else (false, true)
-      val a = streamThroughput(spark, sfDir, rocksdb = first)
-      val b = streamThroughput(spark, sfDir, rocksdb = second)
-      val (hdfs, rocks) = if (first) (b, a) else (a, b)
-      println(s"""{"stream_rows_per_sec_hdfs":$hdfs,"stream_rows_per_sec_rocksdb":$rocks}""")
-      spark.stop(); return
-    }
-
-    // one warmup run of the flagship to amortize JVM/codegen startup out of q1's number
-    try queries.QueryRegistry.flagship(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
-    // ... and one tiny streaming query: the FIRST streaming query in a run
-    // otherwise pays ~2 s of state-store/streaming-infra class init (measured
-    // via reversed-order runs: whichever of q50/q52 runs first inflates 2×)
-    streamWarmup(spark)
-
-    // fixed-work box calibration (after warmup so the probe isn't measuring
-    // JIT): factor = this box right now / the frozen reference box. The
-    // probe runs BEFORE and AFTER the query suite (VERDICT r14 item 1) —
-    // the factor is applied to `queries_norm` only when the pair agrees
-    // within CalibrationAgreementBand; a disagreeing pair means the box
-    // shifted mid-suite and normalization would ADD noise, so the artifact
-    // records factor_stable:false and falls back to raw. Skipped entirely
-    // under a dev filter (relative iteration needs no normalization).
     // comma-separated name-prefix filter for local iteration (full run if unset)
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.split(',').toSeq)
-    val skipCalib =
-      sys.env.contains("SPARK_GRAFT_NO_CALIBRATION") || filter.isDefined
-    // untimed warm phase (flagged; see calibWarm) — burns the JVM-local
-    // decay ramp so the pre side can land where the post side will
-    val warmPhase: Option[(Int, Double, Double)] =
-      if (skipCalib) None else calibWarm(spark)
-    // sustained-load segment between warm and pre (r18; see calibSustain)
-    val sustainPhase: Option[Double] =
-      if (skipCalib) None else calibSustain(spark)
-    val calibPre: Map[String, Double] =
-      if (skipCalib) Map.empty else settledCalibrate(spark, "pre")
 
     // Rung-scoping: q161's brute ANN serving broadcasts the WHOLE index and
     // scans it per event — it is the exact-oracle BASELINE, kept at the
@@ -353,22 +58,15 @@ object Bench {
       case _ => base
     }
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    // per-query job/task counters: a query's wall time in THIS artifact is
+    // per-query job/task counts: a query's wall time in THIS artifact is
     // (work) + (job count × per-job scheduling floor), and the floor is what
     // external machine load multiplies 3-5× while bulk work absorbs ~1.2×
     // (BASELINE.md round 7). Emitting the counts makes the artifact
     // self-diagnosing: a time that moved with flat jobs+tasks is load, not
     // plan decay.
-    @volatile var jobCount = 0
-    @volatile var taskCount = 0
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCount += 1
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        taskCount += 1
-    })
-    val results = selected.map { case (name, fn) =>
-      jobCount = 0; taskCount = 0
+    val trace = QueryTrace.install(spark)
+    val results = try selected.map { case (name, fn) =>
+      trace.reset()
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -376,19 +74,13 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      val (jc, tc) = (jobCount, taskCount)
-      // isolate queries from each other: drop the store state + cached tables
-      // this query left behind and collect its garbage OUTSIDE the timed
-      // window, so a heavy query can't tax its successors' numbers (the
-      // q66–q68 → q69–q71 neighborhood regression in BENCH_r03)
-      pipeline.KeyedStore.clear()
-      spark.catalog.clearCache()
-      System.gc()
-      (name, dt, jc, tc)
-    }
+      val record = trace.snapshot()
+      isolate(spark)
+      (name, dt, record.jobs, record.tasks)
+    } finally trace.close()
     // WARM second pass over the slowest 20 (full runs only): cold-order JIT/
     // GC noise reads as 1.5-2× on individual queries (q74 r7, q34/q116 r9 —
-    // every one a false regression that WarmBench later cleared). Carrying
+    // every one a false regression that a warm rerun later cleared). Carrying
     // cold+warm in the SAME artifact lets round-over-round diffs
     // self-adjudicate: a real regression moves BOTH columns, cold-order
     // noise leaves warm at the old value. Warm runs use identical
@@ -406,41 +98,9 @@ object Bench {
           catch { case e: Throwable =>
             System.err.println(s"[bench] warm $name failed: ${e.getMessage}"); false }
         val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        pipeline.KeyedStore.clear()
-        spark.catalog.clearCache()
-        System.gc()
+        isolate(spark)
         name -> dt
       }.toMap
-
-    // post-suite probe: brackets the query suite so a mid-run box shift is
-    // DETECTED (pre/post disagreement) instead of silently normalized in
-    val calibPost: Map[String, Double] =
-      if (skipCalib) Map.empty else settledCalibrate(spark, "post")
-    val compositePre = calibPre.values.sum
-    val compositePost = calibPost.values.sum
-    val calibStable = calibPre.nonEmpty && calibPost.nonEmpty && {
-      val mean = (compositePre + compositePost) / 2
-      math.abs(compositePre - compositePost) / mean <= CalibrationAgreementBand
-    }
-    // factor applied only when the pair agrees (else raw = factor 1.0)
-    val calibFactor =
-      if (calibStable) (compositePre + compositePost) / 2 / CalibrationRefComposite
-      else 1.0
-    // the BRACKET factor is recorded unconditionally as a diagnostic: mean
-    // of the two sides over the ref, never gated. Measured across the five
-    // r15 same-code runs (raw totals spread 30% on a moving box), dividing
-    // totals by it reduced every pairwise disagreement (e.g. 22.4% raw ->
-    // 15.0%) — so a reader comparing artifacts of MIXED stability divides
-    // `queries` by this scalar instead of trusting the gated column across
-    // the stability boundary. queries_norm_bracket[q] = queries[q]/this.
-    val calibFactorBracket =
-      if (calibPre.nonEmpty && calibPost.nonEmpty)
-        (compositePre + compositePost) / 2 / CalibrationRefComposite
-      else 1.0
-    if (calibPre.nonEmpty)
-      System.err.println(f"[bench] calibration factor=$calibFactor%.3f " +
-        f"stable=$calibStable (pre=$compositePre%.3f post=$compositePost%.3f " +
-        f"band=${CalibrationAgreementBand})")
 
     // best-of-2 trials: throughput is floored by per-micro-batch fixed
     // overhead and swings ±40% with background machine load (BASELINE.md
@@ -481,43 +141,9 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage catch { case _: Throwable => -1.0 }
     val warmJson = warm.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // calibration block + box-normalized per-query times: cross-round diffs
-    // read queries_norm (and total_norm) — a normalized ratio that still
-    // moves is code; one that flattens was the box. Per-component factors
-    // (mean of pre/post over the frozen ref) make a sched- or shuffle-driven
-    // swing diagnosable instead of silently folded into the composite.
-    val calibJson = {
-      def obj(m: Map[String, Double]): String =
-        m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-      val componentFactors =
-        if (calibPre.isEmpty || calibPost.isEmpty) Map.empty[String, Double]
-        else CalibrationRef.map { case (k, ref) =>
-          k -> (calibPre(k) + calibPost(k)) / 2 / ref
-        }
-      Seq(
-        "\"pre\":" + obj(calibPre),
-        "\"post\":" + obj(calibPost),
-        "\"composite_pre\":" + compositePre,
-        "\"composite_post\":" + compositePost,
-        "\"ref_components\":" + obj(CalibrationRef),
-        "\"ref_composite\":" + CalibrationRefComposite,
-        "\"component_factors\":" + obj(componentFactors),
-        "\"agreement_band\":" + CalibrationAgreementBand,
-        "\"factor_stable\":" + calibStable,
-        "\"factor_bracket\":" + calibFactorBracket,
-        "\"factor\":" + calibFactor
-      ).mkString("{" + warmJsonFragment(warmPhase) +
-        sustainJsonFragment(sustainPhase), ",", "}")
-    }
-    def norm4(v: Double): Double = math.round(v / calibFactor * 10000) / 10000.0
-    val qsNorm = results.map { case (k, v, _, _) => "\"" + k + "\":" + norm4(v) }
-      .mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec",$marker"queries":$qs,""" +
       s""""warm_queries":$warmJson,""" +
-      s""""calibration":$calibJson,"total_norm":${norm4(total)},""" +
-      s""""queries_norm":$qsNorm,""" +
       s""""jobs_tasks":$jobsJson,""" +
       s""""failed":$failedJson,"stream_rows_per_sec":$streamRate,""" +
       s""""stream_rows_per_sec_rocksdb":$streamRateRocks,""" +
@@ -537,44 +163,69 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
     }
+    println(summaryLine(results.map { case (k, v, _, _) => k -> v }, marker, failedJson,
+      streamRate, streamRateRocks, statelessRate, load, fullPath, sfDir))
+    spark.stop()
+  }
+
+  /** The FINAL stdout line (r20, VERDICT r19 item 1): harnesses parse the
+    * ~2000-char TAIL of stdout, so the last line must (a) be complete inside
+    * that window and (b) carry a per-query `"queries"` map. A full-name
+    * 171-query map is ~4.5 KB (names alone sum to 3.1 KB) and can NEVER fit
+    * the window, so this line carries the slowest-first PREFIX of the map
+    * that fits [[SummaryBudget]] characters — the fill stops at the first
+    * entry that does not fit, so `queries` is always exactly the N slowest —
+    * plus `queries_omitted` for the rest (the sub-second tail of
+    * scheduling-floor rows). The complete map is printed before it and
+    * persisted in the full artifact.
+    */
+  private[graft] def summaryLine(times: Seq[(String, Double)], marker: String,
+                                 failedJson: String, streamRate: Double, rocksRate: Double,
+                                 statelessRate: Double, load: Double, fullPath: String,
+                                 sfDir: String): String = {
     def r2(v: Double): Double = math.round(v * 100) / 100.0
-    val meanSec = if (results.nonEmpty) r2(total / results.size) else 0.0
-    // FINAL line (r20, VERDICT r19 item 1): the driver parses the ~2000-char
-    // TAIL of stdout, so the last line must (a) be complete inside that
-    // window and (b) carry a per-query `"queries"` map — the r19 compact
-    // line had only a "slowest" top-20 and parsed to nothing. A full-name
-    // 171-query map is ~4.5 KB (measured: names alone sum to 3.1 KB) and
-    // can NEVER fit the window, so this line carries the SLOWEST-first
-    // prefix of the map that fits a conservative budget, plus
-    // `queries_omitted` for the count that didn't. The omitted queries are
-    // the sub-second tail (scheduling-floor rows); the COMPLETE map is
-    // printed above and persisted in the full artifact — nothing is removed
-    // from the bench's primary output, this line is an additive parser aid.
-    val lineBudget = 1850
+    val total = times.map(_._2).sum
+    val meanSec = if (times.nonEmpty) r2(total / times.size) else 0.0
     val head =
       s"""{"metric":"total","value":${r2(total)},"unit":"sec",$marker""" +
-      s""""n_queries":${results.size},"mean_sec":$meanSec,""" +
-      s""""calib_factor":${r2(calibFactor)},"calib_stable":$calibStable,""" +
-      s""""calib_factor_bracket":${r2(calibFactorBracket)},""" +
-      s""""total_norm":${r2(total / calibFactor)},"queries":{"""
-    val tailPart =
-      s"""},"queries_omitted":QQQ,""" +
-      s""""failed":$failedJson,"stream_rows_per_sec":${r2(streamRate)},""" +
-      s""""stream_rows_per_sec_rocksdb":${r2(streamRateRocks)},""" +
+      s""""n_queries":${times.size},"mean_sec":$meanSec,"queries":{"""
+    def tail(omitted: Int): String =
+      s"""},"queries_omitted":$omitted,"failed":$failedJson,""" +
+      s""""stream_rows_per_sec":${r2(streamRate)},""" +
+      s""""stream_rows_per_sec_rocksdb":${r2(rocksRate)},""" +
       s""""stream_stateless_rows_per_sec":${r2(statelessRate)},""" +
       s""""load_avg":${r2(load)},"full_artifact":"$fullPath","sf":"$sfDir"}"""
-    val entries = results.sortBy(-_._2)
-      .map { case (k, v, _, _) => "\"" + k + "\":" + r2(v) }
-    val fixedLen = head.length + tailPart.length
-    var used = 0
-    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-    entries.foreach { e =>
-      val add = e.length + (if (kept.nonEmpty) 1 else 0)
-      if (fixedLen + used + add <= lineBudget) { kept += e; used += add }
-    }
-    println(head + kept.mkString(",") +
-      tailPart.replace("QQQ", (entries.size - kept.size).toString))
-    spark.stop()
+    val entries = times.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + r2(v) }
+    // sized with the largest possible omitted count, so the real one fits too
+    val room = SummaryBudget - head.length - tail(entries.size).length
+    val lengths = entries.scanLeft(-1)(_ + _.length + 1).tail
+    val kept = entries.take(lengths.takeWhile(_ <= room).size)
+    head + kept.mkString(",") + tail(entries.size - kept.size)
+  }
+
+  /** Character budget of [[summaryLine]]: under a 2000-char tail capture,
+    * with room for a trailing newline and stderr interleaving.
+    */
+  private[graft] val SummaryBudget = 1850
+
+  /** One run of the flagship, to amortize JVM/codegen startup out of the
+    * first measured query, then [[streamWarmup]].
+    */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+    try queries.QueryRegistry.flagship(spark, sfDir).write.format("noop").mode("overwrite").save()
+    catch { case _: Throwable => }
+    streamWarmup(spark)
+  }
+
+  /** Isolate measured runs from each other: drop the store state and cached
+    * tables a run left behind and collect its garbage OUTSIDE the timed
+    * window, so a heavy query can't tax its successors' numbers (the
+    * q66–q68 → q69–q71 neighborhood regression in BENCH_r03).
+    */
+  private[graft] def isolate(spark: SparkSession): Unit = {
+    pipeline.KeyedStore.clear()
+    spark.catalog.clearCache()
+    System.gc()
   }
 
   /** Events/second through a keyed tumbling-window count+sum (the NEXMark-style
@@ -616,8 +267,7 @@ object Bench {
     val changelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val prevProvider = spark.conf.getOption(providerKey)
     val prevChangelog = spark.conf.getOption(changelogKey)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     // watermark bookkeeping alone doesn't need an extra empty micro-batch after
     // every data batch — halves the number of batch commits
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
@@ -653,12 +303,7 @@ object Bench {
         }
       }
     val t0 = System.nanoTime()
-    try q.processAllAvailable() finally {
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream] batch=${p.batchId} rows=${p.numInputRows} ${p.durationMs}"))
-      q.stop()
-    }
+    try q.processAllAvailable() finally q.stop()
     val rate = nRows / ((System.nanoTime() - t0) / 1e9)
     pipeline.TempFiles.deleteTree(work)
     rate

@@ -64,11 +64,9 @@ object GraftSession {
       // RUNNABLE frame (OPTIMIZATION_r19.md has the stack + A/B). The graft
       // manager is pure NIO for file: roots and DELEGATES to Spark's default
       // for every other scheme, so cluster deployments (hdfs:/s3a:
-      // checkpoints) keep stock semantics. SPARK_GRAFT_CKPT_MANAGER swaps a
-      // different manager in for A/B; checkpoint checksums (4.1) stay ON.
+      // checkpoints) keep stock semantics; checkpoint checksums (4.1) stay ON.
       .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_MANAGER",
-          "graft.streaming.LocalCheckpointFileManager"))
+        "graft.streaming.LocalCheckpointFileManager")
   }
 
   /** Cluster-mode tuning for the 100 TB target (applied on top of `tune`) —
@@ -108,10 +106,17 @@ object GraftSession {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (64L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
 
-  def local(cores: String = "32", appName: String = "graft"): SparkSession = {
+  /** Local task slots for every graft main: `SPARK_GRAFT_CPUS`, else every
+    * available processor.
+    */
+  private val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The tuned `local[cores]` session every graft main opens. */
+  def local(appName: String, shufflePartitions: Int = math.max(4, cores)): SparkSession = {
     val spark = tune(
       SparkSession.builder().master(s"local[$cores]").appName(appName),
-      shufflePartitions = math.max(4, cores.toIntOption.getOrElse(32))
+      shufflePartitions
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-batch latency profile — the honest counterpart to `graft.MaxRate`
   * for the reference's OTHER headline number: Jet publishes p99.99 < 10 ms at
   * 20 M items/s single-node (site/website/blog/2020-08-05-gc-tuning-for-jet.md:19-27)
@@ -26,10 +24,7 @@ object Latency {
 
   def main(args: Array[String]): Unit = {
     val rate = sys.env.getOrElse("SPARK_GRAFT_LATENCY_RATE", "1000000").toLong
-    val spark = GraftSession.tune(
-      SparkSession.builder().master("local[32]").appName("graft-latency"),
-      shufflePartitions = 8).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-latency", shufflePartitions = 8)
 
     // the SAME pipelines MaxRate's ceilings were measured on (RateWorkloads) —
     // the latency profile and the rate ladder calibrate one workload.

@@ -26,29 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * up to 3 times, so a transient first-probe failure (r16's stream_join
   * reading 0.0 while re-trials sustained 375k) is adjudicated IN the
   * artifact instead of BASELINE prose. Results are recorded in BASELINE.md, not gated:
-  * the number is machine-relative (local[32] micro-batch vs the reference's
+  * the number is machine-relative (one-box micro-batch vs the reference's
   * 45-node event-at-a-time cluster) and calibrates the architecture, not the
   * round artifact. SPARK_GRAFT_MAXRATE_ONLY=name,... filters pipelines.
-  *
-  * Calibration (r15, VERDICT r14 item 2; symmetrized r16, VERDICT r15 item
-  * 5): the artifact carries the same fixed-work probe block as the bench
-  * ([[Bench.calibrate]]), because two consecutive rounds needed manual
-  * same-code control runs to adjudicate rate dips as box shifts. r16 runs a
-  * settled side BOTH before and after the ladder — the ladder runs for
-  * minutes, longer than the bench suite's exposure, so a single pre-side
-  * factor silently normalizes a box that shifts MID-ladder, exactly the
-  * failure mode Bench's pre/post pair was built to refuse (and BASELINE's
-  * r15 observation that trial outcomes correlate inversely with the probe
-  * factor shows the one-sided factor was already over-read). The block now
-  * carries the same fields as Bench's: `factor_stable` (pre/post composites
-  * agree within [[Bench.CalibrationAgreementBand]]), gated `factor` (1.0
-  * when unstable — honest refusal), ungated `factor_bracket`, and
-  * per-component factors. Decomposition rule: a stateful-pipeline ceiling
-  * is floored by per-batch state commits and the per-trigger scheduling
-  * floor, so compare rate deltas against the `state_sec`/`sched_sec`
-  * component factors (rates scale ~1/factor); the stateless ceiling tracks
-  * `cpu_sec`/`shuffle_sec`. A rate dip that tracks its components' factor
-  * is the box, by arithmetic — no control run needed.
   */
 object MaxRate {
 
@@ -170,34 +150,12 @@ object MaxRate {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_MAXRATE_ONLY").map(_.split(',').toSet)
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-maxrate"),
-      shufflePartitions =
-        sys.env.getOrElse("SPARK_GRAFT_MAXRATE_PARTS", "8").toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // fixed-work box calibration bracketing the ladder (VERDICT r14 item 2 +
-    // r15 item 5): a settled side BEFORE and AFTER, same refusal semantics
-    // as Bench — the factor is applied only when the pair agrees, so a box
-    // that shifts mid-ladder is DETECTED instead of silently normalized.
-    // Skippable for fast iteration (SPARK_GRAFT_NO_CALIBRATION=1).
-    val skipCalib = sys.env.contains("SPARK_GRAFT_NO_CALIBRATION")
-    var warmPhase: Option[(Int, Double, Double)] = None
-    val calibPre: Map[String, Double] =
-      if (skipCalib) Map.empty
-      else {
-        Bench.streamWarmup(spark)
-        // untimed warm phase (flagged; Bench.calibWarm) — burns the
-        // JVM-local decay ramp the r16 sessions measured, then the
-        // settled probe (same discipline as the bench pre/post sides): a
-        // launch-adjacent single shot reads 10-40% high and would make the
-        // rate decomposition blame the box for code
-        warmPhase = Bench.calibWarm(spark)
-        Bench.settledCalibrate(spark, "maxrate-pre")
-      }
+    val spark = GraftSession.local("graft-maxrate",
+      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_MAXRATE_PARTS", "8").toInt)
+    // the first streaming query in a JVM pays the stream-infra class init;
+    // keep it out of the first rung
+    Bench.streamWarmup(spark)
 
     final case class Trial(rate: Long, measured: Double, stateRows: Long)
 
@@ -255,11 +213,11 @@ object MaxRate {
     // exactly one ladder.
     val MaxLadderTrials = 3
 
-    // Below-prior re-trial (r18, VERDICT r17 ADVICE #3): at r17's FIRST
-    // stable calibration, four pipelines read exactly one doubling below
-    // their r16 bests with single-entry trials arrays — the zero/collapse
-    // triggers never fire on a clean-looking down-rung, so the artifact
-    // couldn't say whether the dip was real or doubling-quantization spread.
+    // Below-prior re-trial (r18, VERDICT r17 ADVICE #3): in r17, four
+    // pipelines read exactly one doubling below their r16 bests with
+    // single-entry trials arrays — the zero/collapse triggers never fire on
+    // a clean-looking down-rung, so the artifact couldn't say whether the
+    // dip was real or doubling-quantization spread.
     // Same mechanism as ScaleTrend's prior (SPARK_GRAFT_MAXRATE_PRIOR points
     // at the previous round's artifact): a ladder whose best lands BELOW the
     // prior round's best re-trials (≤ MaxLadderTrials total) and the
@@ -270,27 +228,20 @@ object MaxRate {
     // `"(\w+)":{"rate":` pattern also matched every entry's nested
     // `"best":{"rate":...}` fragment, silently seeding a bogus 'best' key
     val pipelineNames = pipelines.map(_.name).toSet
-    val (priorBests, priorNorms): (Map[String, Long], Map[String, Double]) =
+    val priorBests: Map[String, Long] =
       sys.env.get("SPARK_GRAFT_MAXRATE_PRIOR").filter(_.nonEmpty).flatMap { path =>
         try {
           val txt = new String(java.nio.file.Files.readAllBytes(
             java.nio.file.Paths.get(path)), "UTF-8")
           val re = """"(\w+)":\{"rate":(\d+)""".r
-          val bests = re.findAllMatchIn(txt)
+          Some(re.findAllMatchIn(txt)
             .map(m => m.group(1) -> m.group(2).toLong)
-            .filter { case (n, _) => pipelineNames.contains(n) }.toMap
-          // prior normalized rates (present from r19 artifacts on; absent
-          // in r18's — comparisons then fall back to raw prior_rate)
-          val reN = """"(\w+)":\{"rate":\d+,"rate_norm":([-\d.eE]+)""".r
-          val norms = reN.findAllMatchIn(txt)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter { case (n, _) => pipelineNames.contains(n) }.toMap
-          Some((bests, norms))
+            .filter { case (n, _) => pipelineNames.contains(n) }.toMap)
         } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[maxrate] prior artifact unreadable: $e"); None
         }
-      }.getOrElse((Map.empty, Map.empty))
+      }.getOrElse(Map.empty)
 
     def trialsFor(p: Pipeline): Seq[Trial] = {
       val prior = priorBests.get(p.name)
@@ -311,8 +262,6 @@ object MaxRate {
       trials.toSeq
     }
 
-    // run the ladders now, serialize AFTER calibration: `rate_norm` needs
-    // the bracket factor, which only exists once the post side has run
     val results: Seq[(Pipeline, Seq[Trial], Trial)] =
       pipelines.filter(p => only.forall(_.contains(p.name))).map { p =>
         val trials = trialsFor(p)
@@ -323,75 +272,19 @@ object MaxRate {
         (p, trials, best)
       }
 
-    // post-ladder side: brackets the ladder so a mid-run box shift is
-    // detected (pre/post disagreement → factor_stable:false → factor 1.0)
-    val calibPost: Map[String, Double] =
-      if (skipCalib) Map.empty else Bench.settledCalibrate(spark, "maxrate-post")
-    val compositePre = calibPre.values.sum
-    val compositePost = calibPost.values.sum
-    val calibStable = calibPre.nonEmpty && calibPost.nonEmpty && {
-      val mean = (compositePre + compositePost) / 2
-      math.abs(compositePre - compositePost) / mean <= Bench.CalibrationAgreementBand
-    }
-    val calibFactorBracket =
-      if (calibPre.nonEmpty && calibPost.nonEmpty)
-        (compositePre + compositePost) / 2 / Bench.CalibrationRefComposite
-      else 1.0
-    val calibFactor = if (calibStable) calibFactorBracket else 1.0
-    if (calibPre.nonEmpty)
-      System.err.println(f"[maxrate] calibration factor=$calibFactor%.3f " +
-        f"stable=$calibStable (pre=$compositePre%.3f post=$compositePost%.3f)")
-    // same field names as Bench's calibration block, so a reader applies one
-    // decomposition rule to both artifact families
-    val calibJson = {
-      def obj(m: Map[String, Double]): String =
-        m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-      val componentFactors =
-        if (calibPre.isEmpty || calibPost.isEmpty) Map.empty[String, Double]
-        else Bench.CalibrationRef.map { case (k, ref) =>
-          k -> (calibPre(k) + calibPost(k)) / 2 / ref
-        }
-      Seq(
-        "\"pre\":" + obj(calibPre),
-        "\"post\":" + obj(calibPost),
-        "\"composite_pre\":" + compositePre,
-        "\"composite_post\":" + compositePost,
-        "\"ref_components\":" + obj(Bench.CalibrationRef),
-        "\"ref_composite\":" + Bench.CalibrationRefComposite,
-        "\"component_factors\":" + obj(componentFactors),
-        "\"agreement_band\":" + Bench.CalibrationAgreementBand,
-        "\"factor_stable\":" + calibStable,
-        "\"factor_bracket\":" + calibFactorBracket,
-        "\"factor\":" + calibFactor
-      ).mkString("{" + Bench.warmJsonFragment(warmPhase), ",", "}")
-    }
-    // Box-normalized rates (r19, VERDICT r18 What's-wrong #3): times scale
-    // WITH the box factor, so rates scale INVERSELY — the reference-box
-    // rate estimate is measured × factor (a 5%-slower box reads ~5% lower
-    // rates AND a ~5% higher factor; the product is stable). Normalized
-    // with the unconditional BRACKET factor so mixed-stability artifacts
-    // still compare arithmetically; `factor_stable` says how much to trust
-    // it (same reading rule as Bench's queries_norm_bracket).
-    def rateNorm(measured: Double): Double =
-      math.round(measured * calibFactorBracket * 100) / 100.0
     val resultsJson = results.map { case (p, trials, best) =>
       val priorJson = priorBests.get(p.name)
-        .map(pr => s""""prior_rate":$pr,""").getOrElse("") +
-        priorNorms.get(p.name)
-          .map(pn => s""""prior_rate_norm":$pn,""").getOrElse("")
+        .map(pr => s""""prior_rate":$pr,""").getOrElse("")
       def tJson(t: Trial): String =
-        s"""{"rate":${t.rate},"measured":${t.measured},""" +
-          s""""rate_norm":${rateNorm(t.measured)},"state_rows":${t.stateRows}}"""
-      // top-level fields = best-of (legacy readers unchanged); rate_norm
-      // sits right after rate so the prior-parse anchor stays one regex
-      s""""${p.name}":{"rate":${best.rate},"rate_norm":${rateNorm(best.measured)},""" +
-        s""""measured":${best.measured},""" +
+        s"""{"rate":${t.rate},"measured":${t.measured},"state_rows":${t.stateRows}}"""
+      // top-level fields = best-of (legacy readers unchanged); rate sits
+      // first so the prior-parse anchor stays one regex
+      s""""${p.name}":{"rate":${best.rate},"measured":${best.measured},""" +
         s""""state_rows":${best.stateRows},$priorJson"best":${tJson(best)},""" +
         trials.map(tJson).mkString("\"trials\":[", ",", "]}")
     }
     println(s"""{"metric":"max_sustainable_rate","unit":"rows_per_sec",""" +
-      s""""calibration":$calibJson,""" + resultsJson.mkString(",") + "}")
+      resultsJson.mkString(",") + "}")
     spark.stop()
   }
 }

@@ -97,7 +97,7 @@ object Plans {
   // Streaming queries whose result frame is a memory-sink table (the
   // interesting plan is the in-flight streaming one, not the post-replay
   // batch scan): documented as shuffle-shape prose + the micro-batch plan
-  // properties PlanSpec/ShuffleAudit pin.
+  // properties PlanSpec pins and BASELINE.md's shuffle audit measured.
   private val streamingNotes = Seq(
     "q94_stream_left_join" ->
       ("time-bounded stream-stream LEFT OUTER join (StreamingQueries.scala:191): " +
@@ -438,7 +438,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.local("8", "graft-plans")
+    val spark = GraftSession.local("graft-plans")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
     sb.append(s"Generated by `graft.Plans` at $sfDir. The annotations are the\n")

@@ -299,10 +299,7 @@ object ScaleTrend {
     // optional 4th arg: comma-separated name prefixes to run a subset
     val only: Option[Seq[String]] =
       if (args.length > 3) Some(args(3).split(",").toSeq) else None
-    val spark = GraftSession.tune(
-      SparkSession.builder().master("local[32]").appName("graft-scaletrend"),
-      shufflePartitions = 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scaletrend", shufflePartitions = 32)
 
     generate(spark, src, out, factor)
 

@@ -425,7 +425,8 @@ object DedupFunctions {
     // distinct tokens dedup identically in both engines). Containments are
     // computed BEFORE the multi-band dedup so dropDuplicates shuffles tiny
     // (id, id, cont, cont) rows, not pair rows still carrying both hash
-    // arrays — measured 19.5 MB → ~2 MB shuffle at sf0.1 (ShuffleAudit);
+    // arrays — measured 19.5 MB → ~2 MB shuffle at sf0.1 (BASELINE.md,
+    // round-5 shuffle audit);
     // cont is a pure function of the pair, so the kept row is deterministic.
     // one-pass counts (native SetOverlap): |∩|, |A|, |B| from a single table
     // scan per pair — the composed form paid three set builds per candidate
@@ -478,9 +479,10 @@ object DedupFunctions {
   /** @param broadcastNew when true (the nightly-batch norm: new ≪ reference)
     *   the NEW side's banded signatures are broadcast, so the REFERENCE
     *   corpus — the 100 TB side — is never shuffled at all: the join runs
-    *   map-side over the ref scan (ShuffleAudit: 12.9 MB → 0 MB exchange at
-    *   sf0.1). Leave false when the new batch is too big to replicate
-    *   (rule of thumb: banded signatures ≈ bands × tokens × 8 B per doc).
+    *   map-side over the ref scan (12.9 MB → 0 MB exchange at sf0.1;
+    *   BASELINE.md, round-5 shuffle audit). Leave false when the new batch
+    *   is too big to replicate (rule of thumb: banded signatures ≈ bands ×
+    *   tokens × 8 B per doc).
     */
   def crossCorpusPairs(newDf: DataFrame, refDf: DataFrame, idCol: String,
                        setCol: String, hashes: Int, bands: Int,
@@ -603,7 +605,8 @@ object DedupFunctions {
       // the pair, so every duplicate passes or fails the threshold
       // identically — filtering BEFORE the dedup commutes, and shrinks the
       // dedup shuffle from all band-colliding candidates to the final pair
-      // list (ShuffleAudit: the dominant exchange in the broadcast plan)
+      // list (the dominant exchange in the broadcast plan; BASELINE.md,
+      // round-5 shuffle audit)
       .filter(col("jaccard") >= minJaccard)
       .dropDuplicates("id_new", "id_ref")
   }

@@ -389,10 +389,11 @@ object CurationQueries {
     * whose bucket is bounded by the SOURCE COUNT (not corpus size), so the
     * join cannot go quadratic in rows; the output is a #sources² matrix —
     * model-sized. The gram key is the 64-bit md5 PREFIX, not the full hash:
-    * ShuffleAudit measured the full-hex key at 9.2 MB shuffled per 0.003 MB
-    * of input (read twice by the self-join) — the 16-hex-char truncation
-    * halves that, and both engines truncate identically so any collision
-    * perturbs both counts the same way (the differential check stays exact).
+    * a shuffle audit (BASELINE.md, round 5 q101–q106 batch) measured the
+    * full-hex key at 9.2 MB shuffled per 0.003 MB of input (read twice by
+    * the self-join) — the 16-hex-char truncation halves that, and both
+    * engines truncate identically so any collision perturbs both counts the
+    * same way (the differential check stays exact).
     */
   val q105_source_ngram_overlap: Q = (s, dir) => {
     import s.implicits._

@@ -39,8 +39,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * Spark's default `FileContextBasedCheckpointFileManager`, whose FileContext
   * rename semantics are the right (and RPC-based, fork-free) choice there —
   * production clusters lose nothing. Selected via
-  * `spark.sql.streaming.checkpointFileManagerClass` in [[graft.GraftSession]]
-  * (env `SPARK_GRAFT_CKPT_MANAGER` swaps any other manager back in).
+  * `spark.sql.streaming.checkpointFileManagerClass` in [[graft.GraftSession]].
   * The checkpoint checksum layer (`spark.sql.streaming.checkpoint.
   * fileChecksum.enabled`, Spark 4.1) sits ABOVE the manager and keeps
   * working — its twin files just stop forking too.

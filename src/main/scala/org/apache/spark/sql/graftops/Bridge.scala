@@ -13,6 +13,19 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Block until every event posted so far has reached every listener,
+    * streaming-query listeners included (their bus is one queue of the
+    * context's listener bus).
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Every listener registered on the context's listener bus. */
+  def sparkListeners(spark: org.apache.spark.sql.SparkSession): Seq[AnyRef] = {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.listenerBus.listeners.asScala.toSeq
+  }
+
   /** The user-visible name a column would take in a projection, when it is
     * statically known (an `.as(...)` alias or a plain attribute reference) —
     * before analysis, straight off the column node. None for computed columns.

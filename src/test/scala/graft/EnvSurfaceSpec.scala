@@ -52,6 +52,12 @@ class EnvSurfaceSpec extends AnyFunSuite {
         "Edit EnvSurfaceSpec.allowed only if the change is deliberate.")
   }
 
+  test("SPARK_GRAFT_CPUS is read only by the session factory") {
+    val readers = sources.filter(f => Files.readString(f).contains("\"SPARK_GRAFT_CPUS\""))
+      .map(root)
+    assert(readers == Seq("src/main/scala/graft/GraftSession.scala"))
+  }
+
   private def root(f: Path): String = Paths.get(sys.props("user.dir")).relativize(f).toString
 }
 
@@ -60,7 +66,6 @@ object EnvSurfaceSpec {
   /** `env:` = environment variable, `prop:` = JVM system property. */
   val allowed: Set[String] = Set(
     // session bootstrap
-    "env:SPARK_GRAFT_CKPT_MANAGER",
     "env:SPARK_GRAFT_CPUS",
     "env:SPARK_GRAFT_REPLAY_CHUNKS",
     "env:SPARK_GRAFT_ROCKSDB",
@@ -74,17 +79,11 @@ object EnvSurfaceSpec {
     "prop:java.io.tmpdir",
     "prop:spark.master",
     "prop:user.name",
-    // Bench and calibration
+    // Bench
     "env:SPARK_GRAFT_BENCH_FILTER",
     "env:SPARK_GRAFT_BENCH_ORDER",
     "env:SPARK_GRAFT_BENCH_OUT",
-    "env:SPARK_GRAFT_CALIB_SUSTAIN",
-    "env:SPARK_GRAFT_CALIB_WARM",
-    "env:SPARK_GRAFT_NO_CALIBRATION",
     "env:SPARK_GRAFT_NO_WARM_PASS",
-    "env:SPARK_GRAFT_STREAM_DEBUG",
-    "env:SPARK_GRAFT_STREAM_ONLY",
-    "env:SPARK_GRAFT_STREAM_PARTS",
     // rate and latency rigs
     "env:SPARK_GRAFT_ANN_INDEX",
     "env:SPARK_GRAFT_ANN_INDEX_DIR",
@@ -97,11 +96,5 @@ object EnvSurfaceSpec {
     "env:SPARK_GRAFT_MAXRATE_PARTS",
     "env:SPARK_GRAFT_MAXRATE_PRIOR",
     "env:SPARK_GRAFT_MAXRATE_START",
-    "env:SPARK_GRAFT_SCALETREND_PRIOR",
-    // diagnostic mains
-    "env:GRAFT_PROFILE_VERBOSE",
-    "env:SPARK_GRAFT_AUDIT_QUERIES",
-    "env:SPARK_GRAFT_SKEW_MIN_TASKS",
-    "env:SPARK_GRAFT_WARM_QUERIES",
-    "env:SPARK_GRAFT_WARM_REPS")
+    "env:SPARK_GRAFT_SCALETREND_PRIOR")
 }
