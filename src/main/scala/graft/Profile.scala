@@ -12,7 +12,9 @@ import graft.trace.QueryTrace
   * with its [[QueryTrace]] record — jobs, stages and tasks, task run and CPU
   * time, summed job wall time (wall minus job time is driver-side latency:
   * per-job scheduling, catalog work, micro-batch commits), input and shuffle
-  * bytes, per-stage task-duration median/max and shuffle-read max, each
+  * bytes, Janino compiles and their time (`codegen_compiles`,
+  * `codegen_compile_ms`: a warm rerun of an unchanged query compiles 0),
+  * per-stage task-duration median/max and shuffle-read max, each
   * micro-batch's `durationMs` and state-operator rows and commit time, and
   * the skew verdict ([[QueryTrace.Snapshot.skew]]). With `--reps` a last line
   * per query carries the best and mean warm time: A/B a single query's change

@@ -30,7 +30,8 @@ import org.apache.spark.sql.types._
   * (embedding fixtures; matches what the literal form required).
   * Measured: −11% (q65) to −41% (q109) warm against the literal tree
   * (OPTIMIZATION_r20.md C2); the literal tree lives on only as
-  * ArgminSqDistSpec's reference.
+  * ArgminSqDistSpec's reference. [[graft.sql.LiftLiterals]] applies the
+  * same idea to every comparison and projected literal ([[ParamLiteral]]).
   */
 case class ArgminSqDist(child: Expression, cents: Array[Array[Double]])
     extends UnaryExpression {

@@ -14,6 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *   spark.sql("SELECT graft_dot(a.emb, b.emb) FROM ...")
   *   spark.sql("SELECT graft_minhash(token_hashes, 12) FROM ...")
   *
+  * It also injects [[LiftLiterals]], the physical rule that keeps comparison
+  * and projected literals out of generated code, so repeated statement shapes
+  * reuse their compiled classes.
+  *
   * Activate with `.withExtensions(new GraftExtensions)` (GraftSession does) or
   * `spark.sql.extensions=graft.sql.GraftExtensions`.
   */
@@ -23,6 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectColumnar(_ => LiftLiterals.columnar)
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       info("graft_dot", "graft_dot(a, b) - dot product of two double arrays (codegen)"),

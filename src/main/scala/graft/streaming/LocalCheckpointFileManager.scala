@@ -3,7 +3,7 @@ package graft.streaming
 import java.io.{File, FileNotFoundException, InputStream}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
-import java.nio.file.{FileAlreadyExistsException => NioFileAlreadyExists, Files, NoSuchFileException, Path => JPath, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{AccessDeniedException, FileAlreadyExistsException => NioFileAlreadyExists, Files, FileSystemException, NoSuchFileException, Path => JPath, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FSDataInputStream, Path, PathFilter, PositionedReadable, Seekable}
@@ -111,15 +111,13 @@ class LocalCheckpointFileManager(root: Path, hadoopConf: Configuration)
                   case _: NioFileAlreadyExists =>
                     throw new FileAlreadyExistsException(
                       s"rename destination $dst already exists")
-                  case e @ (_: UnsupportedOperationException |
-                            _: java.nio.file.FileSystemException)
-                      if !e.isInstanceOf[NoSuchFileException] =>
+                  case e: Exception if LocalCheckpointFileManager.noHardLinks(e) =>
                     // file: roots on filesystems WITHOUT hard links (some
                     // overlay/network mounts) refuse link(2) — fall back to
                     // Spark's FileSystemBased manager semantics: exists-check
                     // + atomic move (a narrower no-overwrite guarantee, but
                     // the write succeeds instead of failing the query).
-                    // ADVICE r19.
+                    // Any other failure propagates.
                     if (Files.exists(dst))
                       throw new FileAlreadyExistsException(
                         s"rename destination $dst already exists")
@@ -242,4 +240,19 @@ class LocalCheckpointFileManager(root: Path, hadoopConf: Configuration)
 object LocalCheckpointFileManager {
   /** The conf value [[graft.GraftSession]] installs. */
   val className: String = classOf[LocalCheckpointFileManager].getName
+
+  /** Whether a failed `Files.createLink` says the filesystem has no hard
+    * links: `UnsupportedOperationException`, or a `FileSystemException`
+    * whose reason is EPERM ("Operation not permitted", what link(2) returns
+    * on filesystems that do not support it) or ENOTSUP/EOPNOTSUPP
+    * ("Operation not supported"). A denied permission, a missing file or any
+    * other I/O failure is not, and must fail the write.
+    */
+  def noHardLinks(e: Throwable): Boolean = e match {
+    case _: UnsupportedOperationException => true
+    case _: AccessDeniedException | _: NoSuchFileException | _: NioFileAlreadyExists => false
+    case f: FileSystemException => Option(f.getReason).exists(r =>
+      r.contains("Operation not permitted") || r.contains("Operation not supported"))
+    case _ => false
+  }
 }

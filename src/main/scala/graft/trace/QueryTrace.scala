@@ -2,17 +2,21 @@ package graft.trace
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graftops.Bridge
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
-/** The scheduler and micro-batch record of one run: one SparkListener (jobs,
-  * stages, tasks and their metrics) plus one StreamingQueryListener (each
-  * micro-batch's progress). A caller brackets a run with [[reset]] and
-  * [[snapshot]]; both first drain the listener bus, so a snapshot holds every
-  * event the run posted and none of an earlier run's. [[close]] removes both
-  * listeners from the session.
+/** The scheduler, codegen and micro-batch record of one run: one
+  * SparkListener (jobs, stages, tasks and their metrics), one
+  * StreamingQueryListener (each micro-batch's progress) and the JVM's Janino
+  * compile count and time (Spark's own codegen counters, read as deltas, so
+  * they cover every session of the JVM). A caller brackets a run with
+  * [[reset]] and [[snapshot]]; both first drain the listener bus, so a
+  * snapshot holds every event the run posted and none of an earlier run's.
+  * [[close]] removes both listeners from the session.
   *
   * Jet reads a job's metrics from one place (`Job.getMetrics()`); this is
   * that place for the graft mains.
@@ -33,6 +37,8 @@ final class QueryTrace private (spark: SparkSession) extends AutoCloseable {
   // per stage id: (task duration ms, task shuffle-read bytes) of each task
   private val stageTasks = mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[(Long, Long)]]
   private val batches = mutable.ArrayBuffer.empty[Batch]
+  private var compiles0 = compiles
+  private var compileNs0 = CodeGenerator.compileTime
 
   private val jobListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = QueryTrace.this.synchronized {
@@ -78,6 +84,7 @@ final class QueryTrace private (spark: SparkSession) extends AutoCloseable {
       runMs = 0L; cpuNs = 0L; jobWallMs = 0L
       inputBytes = 0L; shuffleRead = 0L; shuffleWrite = 0L
       jobStarts.clear(); stageTasks.clear(); batches.clear()
+      compiles0 = compiles; compileNs0 = CodeGenerator.compileTime
     }
   }
 
@@ -91,7 +98,8 @@ final class QueryTrace private (spark: SparkSession) extends AutoCloseable {
           ts.map(_._2).max)
       }
       Snapshot(jobs, stages, tasks, runMs / 1e3, cpuNs / 1e9, jobWallMs / 1e3,
-        inputBytes, shuffleRead, shuffleWrite, perStage, batches.toSeq)
+        inputBytes, shuffleRead, shuffleWrite, compiles - compiles0,
+        (CodeGenerator.compileTime - compileNs0) / 1e6, perStage, batches.toSeq)
     }
   }
 
@@ -107,6 +115,9 @@ object QueryTrace {
     * a handful of tasks says nothing about a hot key.
     */
   val SkewMinTasks = 8
+
+  /** Janino compiles so far in this JVM. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def install(spark: SparkSession): QueryTrace = {
     Bridge.drainListenerBus(spark)
@@ -135,6 +146,7 @@ object QueryTrace {
   final case class Snapshot(jobs: Int, stages: Int, tasks: Int, taskRunS: Double,
                             taskCpuS: Double, jobWallS: Double, inputBytes: Long,
                             shuffleReadBytes: Long, shuffleWriteBytes: Long,
+                            codegenCompiles: Long, codegenCompileMs: Double,
                             stageStats: Seq[StageStat], batches: Seq[Batch]) {
 
     /** The skew signature (a hot key owning a partition): the worst task
@@ -164,6 +176,8 @@ object QueryTrace {
         s""""job_wall_s":$jobWallS""", s""""input_bytes":$inputBytes""",
         s""""shuffle_read_bytes":$shuffleReadBytes""",
         s""""shuffle_write_bytes":$shuffleWriteBytes""",
+        s""""codegen_compiles":$codegenCompiles""",
+        s""""codegen_compile_ms":$codegenCompileMs""",
         stageJson.mkString("\"stage_tasks\":[", ",", "]"),
         batchJson.mkString("\"batches\":[", ",", "]"),
         s""""skew":$skew""").mkString(",")

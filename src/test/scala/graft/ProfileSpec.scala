@@ -6,6 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graftops.Bridge
 
 class ProfileSpec extends SparkSpec {
@@ -32,6 +33,12 @@ class ProfileSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_profile_")
     val opts = Profile.parse(Seq("--reps", "1", "--plans", dir.toString, "t", "q01,q50"))
     val lines = ArrayBuffer.empty[String]
+    // the codegen cache is JVM-wide: empty it so the cold run is cold
+    // whichever suite ran q01 before in this JVM
+    val cacheField = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cacheField.setAccessible(true)
+    val cache = cacheField.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
     Profile.run(spark, sf, Profile.resolve(SparkEntry.queries, opts.names), opts, lines += _)
     val json = lines.map(new ObjectMapper().readTree(_)).toSeq
     def run(q: String, r: String) =
@@ -43,6 +50,9 @@ class ProfileSpec extends SparkSpec {
     assert(batch.get("tasks").asInt > 0)
     assert(batch.get("task_run_s").asDouble > 0)
     assert(batch.has("skew") && batch.has("stage_tasks"))
+    assert(batch.get("codegen_compiles").asLong > 0)
+    assert(batch.get("codegen_compile_ms").asDouble > 0)
+    assert(run("q01_pricing_summary", "warm1").get("codegen_compiles").asLong == 0)
 
     val batches = run("q50_stream_tumbling", "warm1").get("batches").elements.asScala.toSeq
     assert(batches.nonEmpty)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{AccessDeniedException, FileSystemException, Files, NoSuchFileException, Paths}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
@@ -126,5 +126,18 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(created.toUri.getScheme === "file")
     assert(Files.isDirectory(Paths.get(created.toUri.getPath)))
     assert(fm.isLocal)
+  }
+
+  test("only a link-less filesystem falls back from link(2); other failures propagate") {
+    import LocalCheckpointFileManager.noHardLinks
+    assert(noHardLinks(new UnsupportedOperationException("links")))
+    assert(noHardLinks(new FileSystemException("/c/.tmp", "/c/5", "Operation not permitted")))
+    assert(noHardLinks(new FileSystemException("/c/.tmp", "/c/5", "Operation not supported")))
+    assert(!noHardLinks(new AccessDeniedException("/c/.tmp", "/c/5", "Permission denied")))
+    assert(!noHardLinks(new AccessDeniedException("/c/.tmp", "/c/5", "Operation not permitted")))
+    assert(!noHardLinks(new FileSystemException("/c/.tmp", "/c/5", "Input/output error")))
+    assert(!noHardLinks(new FileSystemException("/c/.tmp")))
+    assert(!noHardLinks(new NoSuchFileException("/c/.tmp")))
+    assert(!noHardLinks(new java.io.IOException("Operation not permitted")))
   }
 }
