@@ -31,13 +31,12 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // let AQE re-partition plans under .cache(): KeyedStore materializes
-      // every store mutation through cache()+count(), which otherwise pins
-      // the pre-AQE 32-partition shape for the cache build AND every read —
-      // r7 profile: q67's KB-sized store merges ran 198 near-empty tasks
-      // (200-500 ms each of pure fixed overhead) with this off, 10 tasks
-      // with it on. Per-task fixed cost is exactly the class that inflates
-      // 3-5× under external load while bulk compute inflates ~1.2×.
+      // let AQE re-partition plans under .cache(): a cached frame otherwise
+      // pins the pre-AQE 32-partition shape for the cache build AND every
+      // read — r7 profile: q67's KB-sized cached merges ran 198 near-empty
+      // tasks (200-500 ms each of pure fixed overhead) with this off, 10
+      // tasks with it on. Per-task fixed cost is exactly the class that
+      // inflates 3-5× under external load while bulk compute inflates ~1.2×.
       // (Deliberately NOT parallelismFirst=false: with the default,
       // coalescing already shrinks the advisory to totalSize/parallelism for
       // small shuffles; size-first coalescing serialized q47's compact-but-

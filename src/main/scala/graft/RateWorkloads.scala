@@ -3,10 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The NEXMark-style rate-source workload shared by the calibration
-  * instruments (`MaxRate`, `Latency`) — one definition so the latency profile
-  * always measures exactly the pipeline whose rate ceiling was published.
-  */
+/** The NEXMark-style rate-source workloads of the `MaxRate` ladder. */
 object RateWorkloads {
 
   /** Rate source shaped to (ts, event_type, value). */

@@ -9,8 +9,14 @@ import org.apache.spark.sql.functions._
   * (reference: Sources.map Sources.java:172, Sinks.map Sinks.java:136,
   * mapUsingIMap GeneralStage.java:678).
   *
-  * Implementation: named cached DataFrames on the driver's catalog. Upsert is
+  * Implementation: named snapshot DataFrames on the driver's catalog. Upsert is
   * last-writer-wins per key, implemented as union + keep-newest (a batch MERGE).
+  * Every mutation commits through one step ([[commit]]): the next snapshot is
+  * an eagerly local-checkpointed leaf with no lineage back to earlier ones, so
+  * a write costs what its batch and the current contents cost, never what the
+  * store's history cost. A frame read from the store keeps reading its
+  * snapshot; Spark's ContextCleaner frees a snapshot's blocks once nothing
+  * (store, view, frame or running query) references it.
   * This is a correctness-first single-session stand-in: at 100 TB scale the
   * store's role is played by a real table format (Delta/Iceberg MERGE) — the
   * API here is the stable seam where that swap happens.
@@ -18,7 +24,6 @@ import org.apache.spark.sql.functions._
 object KeyedStore {
 
   private val tables = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val versionCol = "__graft_version"
   private val versions = new java.util.concurrent.atomic.AtomicLong(0)
 
   // per-store mutation lock: journal-before-swap means there is a window where
@@ -104,24 +109,31 @@ object KeyedStore {
     spark.readStream.schema(journalSchema).parquet(dir)
   }
 
-  def put(name: String, df: DataFrame): Unit = locked(name) {
-    // materialize BEFORE unpersisting the old snapshot (the same
-    // snapshot-stability invariant as upsert/delete/append): a lazily-cached
-    // frame whose lineage reads mutable input could otherwise change contents
-    // when first materialized
-    val snap = df.cache()
-    snap.count()
-    // unpersist the replaced snapshot: a long-running caller re-putting a name
-    // would otherwise pin one dead cached table per call
-    Option(tables.put(name, snap)).foreach(old => if (old ne snap) old.unpersist())
+  /** The one commit step of every mutation, run under the store's lock:
+    * materialize `next` with an eager `localCheckpoint` (a leaf whose plan
+    * holds no earlier snapshot), journal the change from it, then swap it in
+    * and register the view. Journal-before-swap: a failed journal write
+    * leaves the store untouched, so a caller's retry re-applies cleanly (the
+    * journal may then hold a duplicate record for the failed attempt —
+    * benign for version-keyed consumers; a doubled MERGE would not be). The
+    * replaced snapshot is not released here: frames read from it and running
+    * queries over it keep working, and Spark frees its blocks once they let
+    * go of it.
+    */
+  private def commit(name: String, next: DataFrame)(record: DataFrame => Unit): Unit = {
+    val snap = next.localCheckpoint(eager = true)
+    record(snap)
+    tables.put(name, snap)
     snap.createOrReplaceTempView(name)
   }
 
-  def get(spark: SparkSession, name: String): DataFrame = {
-    val df = Option(tables.get(name)).getOrElse(
-      throw new IllegalArgumentException(s"KeyedStore: no table '$name'"))
-    if (df.columns.contains(versionCol)) df.drop(versionCol) else df
+  def put(name: String, df: DataFrame): Unit = locked(name) {
+    commit(name, df)(_ => ())
   }
+
+  def get(spark: SparkSession, name: String): DataFrame =
+    Option(tables.get(name)).getOrElse(
+      throw new IllegalArgumentException(s"KeyedStore: no table '$name'"))
 
   def exists(name: String): Boolean = tables.containsKey(name)
 
@@ -136,36 +148,16 @@ object KeyedStore {
   def upsert(name: String, df: DataFrame, keyCols: Seq[String]): Unit = locked(name) {
     require(keyCols.nonEmpty, "upsert needs key columns")
     storeKeys.put(name, keyCols)
-    val incoming = df.withColumn(versionCol, lit(versions.incrementAndGet()))
-    val merged = Option(tables.get(name)) match {
-      case None => incoming
-      case Some(old) =>
-        val oldV =
-          if (old.columns.contains(versionCol)) old
-          else old.withColumn(versionCol, lit(0L))
-        val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(versionCol).desc)
-        oldV.unionByName(incoming)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .drop("__rn")
+    val next = Option(tables.get(name)).fold(df) { old =>
+      // incoming rows (1) rank over stored ones (0) with the same key
+      val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("__incoming").desc)
+      old.withColumn("__incoming", lit(0)).unionByName(df.withColumn("__incoming", lit(1)))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__rn", "__incoming")
     }
-    // materialize before caching so the store is stable even if inputs mutate
-    val snap = merged.cache()
-    snap.count()
-    // journal-before-swap (same invariant as upsertMerging/delete/append); a
-    // failed journal write leaves the store untouched — release the orphaned
-    // snapshot so retries don't pin one dead cached table per attempt
-    journalOrRelease(snap) { recordChanges(name, df, keyCols, "UPSERT") }
-    Option(tables.put(name, snap)).foreach(_.unpersist())
-    snap.drop(versionCol).createOrReplaceTempView(name)
+    commit(name, next)(_ => recordChanges(name, df, keyCols, "UPSERT"))
   }
-
-  /** Run a journal write; on failure unpersist the not-yet-swapped snapshot
-    * before rethrowing (ADVICE r3: a throwing journal otherwise pins one dead
-    * cached table per failed/retried mutation).
-    */
-  private def journalOrRelease(snap: DataFrame)(write: => Unit): Unit =
-    try write catch { case e: Throwable => snap.unpersist(); throw e }
 
   /** Expression-based MERGE upsert — the engine behind Jet's merge-fn sinks
     * (`Sinks.mapWithMerging` Sinks.java:313, `mapWithUpdating` Sinks.java:451,
@@ -197,7 +189,6 @@ object KeyedStore {
     storeKeys.put(name, keyCols)
     val spark = df.sparkSession
     val existing = Option(tables.get(name))
-      .map(t => if (t.columns.contains(versionCol)) t.drop(versionCol) else t)
     if (existing.isEmpty && !updateAlways && deleteWhen.isEmpty) {
       // first write with plain merging semantics: every key is absent, so the
       // result IS the incoming frame — skip the join entirely
@@ -238,25 +229,18 @@ object KeyedStore {
         }
       resolved.as(c)
     }
-    val merged = kept.select(keySel ++ valSel: _*)
-      .withColumn(versionCol, lit(versions.incrementAndGet()))
-    val snap = merged.cache()
-    snap.count()
-    // journal BEFORE swapping the table in: if the journal write fails, the
-    // store is untouched and the caller's retry re-merges cleanly (journal
-    // may then hold a duplicate record for the failed attempt — benign for
-    // version-keyed consumers; a doubled MERGE would not be). The semi join
-    // is null-safe (<=>) like the merge itself, so NULL-keyed rows journal too.
+    // the semi join is null-safe (<=>) like the merge itself, so NULL-keyed
+    // rows journal too
     val touched = df.select(keyCols.map(c => col(c).as(s"__t_$c")): _*).dropDuplicates()
     val semiCond = keyCols.map(k => col(k) <=> col(s"__t_$k")).reduce(_ && _)
-    // deleteWhen removals journal as DELETE records (mirroring delete()):
-    // the left_semi UPSERT join below only covers keys that SURVIVED the
-    // merge, so without this a subscriber mirroring the store would keep the
-    // removed entry forever. The deleted key set = old keys no longer present
-    // in the merged snapshot — derived from the two CACHED frames (old, snap)
-    // with a null-safe anti join, so the full-outer merge join is never
-    // re-executed for journaling.
-    journalOrRelease(snap) {
+    commit(name, kept.select(keySel ++ valSel: _*)) { snap =>
+      // deleteWhen removals journal as DELETE records (mirroring delete()):
+      // the left_semi UPSERT join below only covers keys that SURVIVED the
+      // merge, so without this a subscriber mirroring the store would keep
+      // the removed entry forever. The deleted key set = old keys no longer
+      // present in the new snapshot — derived from the two materialized
+      // snapshots (old, snap) with a null-safe anti join, so the full-outer
+      // merge join is never re-executed for journaling.
       deleteWhen.foreach { _ =>
         val snapKeys = snap
           .select(keyCols.map(c => col(c).as(s"__s_$c")): _*).dropDuplicates()
@@ -265,12 +249,8 @@ object KeyedStore {
           .join(snapKeys, antiCond, "left_anti")
         recordChanges(name, deleted, keyCols, "DELETE")
       }
-      recordChanges(name,
-        snap.drop(versionCol).join(touched, semiCond, "left_semi"),
-        keyCols, "UPSERT")
+      recordChanges(name, snap.join(touched, semiCond, "left_semi"), keyCols, "UPSERT")
     }
-    Option(tables.put(name, snap)).foreach(_.unpersist())
-    snap.drop(versionCol).createOrReplaceTempView(name)
   }
 
   /** Delete by key (CDC DELETE ops): anti-join against the key set. */
@@ -278,16 +258,8 @@ object KeyedStore {
     Option(tables.get(name)).foreach { old =>
       val remaining = old.join(
         keysDf.select(keyCols.map(col): _*).dropDuplicates(), keyCols, "left_anti")
-      val snap = remaining.cache()
-      snap.count()
-      // journal BEFORE the swap (upsertMerging's invariant): a failed journal
-      // write leaves the store untouched so a caller retry is clean
-      journalOrRelease(snap) {
-        recordChanges(name, keysDf.select(keyCols.map(col): _*), keyCols, "DELETE")
-      }
-      Option(tables.put(name, snap)).foreach(_.unpersist())
-      val view = if (snap.columns.contains(versionCol)) snap.drop(versionCol) else snap
-      view.createOrReplaceTempView(name)
+      commit(name, remaining)(_ =>
+        recordChanges(name, keysDf.select(keyCols.map(col): _*), keyCols, "DELETE"))
     }
   }
 
@@ -295,14 +267,8 @@ object KeyedStore {
     * can subscribe to the list as a stream.
     */
   def append(name: String, df: DataFrame): Unit = locked(name) {
-    val merged = Option(tables.get(name)).map(_.unionByName(df)).getOrElse(df)
-    val snap = merged.cache()
-    snap.count()
-    // journal-before-swap, as in upsertMerging/delete: a journal failure must
-    // not leave the store updated with subscribers never seeing the APPEND
-    journalOrRelease(snap) { recordChanges(name, df, df.columns.toSeq, "APPEND") }
-    Option(tables.put(name, snap)).foreach(_.unpersist())
-    snap.createOrReplaceTempView(name)
+    commit(name, Option(tables.get(name)).map(_.unionByName(df)).getOrElse(df))(_ =>
+      recordChanges(name, df, df.columns.toSeq, "APPEND"))
   }
 
   // last streaming batchId successfully MERGEd per (store, jobId):
@@ -335,7 +301,10 @@ object KeyedStore {
       TempFiles.deleteTree(dir)
     })
     appliedBatch.keySet().removeIf(_._1 == name)
-    Option(tables.remove(name)).foreach(_.unpersist())
+    // only the store's own reference goes: the view and any frame read from
+    // the store keep the snapshot until they release it
+    tables.remove(name)
+    ()
   }
 
   def clear(): Unit = { names.foreach(drop); () }

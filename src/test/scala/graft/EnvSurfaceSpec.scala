@@ -91,7 +91,6 @@ object EnvSurfaceSpec {
     "env:SPARK_GRAFT_CONT_PARTS",
     "env:SPARK_GRAFT_CONT_SHAPES",
     "env:SPARK_GRAFT_LATENCY_RATE",
-    "env:SPARK_GRAFT_LATENCY_WORKLOAD",
     "env:SPARK_GRAFT_MAXRATE_ONLY",
     "env:SPARK_GRAFT_MAXRATE_PARTS",
     "env:SPARK_GRAFT_MAXRATE_PRIOR",

@@ -126,11 +126,10 @@ class MergeSinkSpec extends SparkSpec {
   }
 
   test("store snapshots coalesce under AQE (cached plans must not pin shuffle width)") {
-    // guard for spark.sql.optimizer.canChangeCachedPlanOutputPartitioning:
-    // KeyedStore materializes every mutation via cache()+count(); with the
-    // flag off, a KB-sized store snapshot runs (and stays) at the session's
+    // a KB-sized store snapshot must not run (and stay) at the session's
     // full shuffle width — 32 near-empty tasks per mutation at engine
-    // defaults, the r5/r6 q67 inflation (BASELINE.md round 7)
+    // defaults, the r5/r6 q67 inflation (BASELINE.md round 7). KeyedStore
+    // checkpoints each snapshot from the AQE-coalesced final plan.
     KeyedStore.drop("aqe_store")
     val agg = Seq.tabulate(100)(i => (i % 7, i.toLong)).toDF("k", "v")
       .groupBy("k").agg(sum("v").as("s")) // a real exchange feeds the store

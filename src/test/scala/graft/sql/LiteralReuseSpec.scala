@@ -77,6 +77,22 @@ class LiteralReuseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(ParamLiteral(Double.NaN, DoubleType) == ParamLiteral(Double.NaN, DoubleType))
   }
 
+  test("a point SELECT on an IMap mapping re-run with a new key compiles nothing") {
+    val sql = new GraftSql(spark)
+    graft.pipeline.KeyedStore.drop("lr_kv")
+    sql.execute("SINK INTO lr_kv(__key) SELECT * FROM VALUES " +
+      "(1L, 10L), (2L, 20L), (3L, 30L) AS t(__key, v)")
+    sql.execute("CREATE OR REPLACE MAPPING lr_kv TYPE IMap " +
+      "OPTIONS ('keyFormat'='bigint', 'valueFormat'='json-flat')")
+    def point(key: Long): Seq[Row] =
+      sql.execute(s"SELECT __key, v FROM lr_kv WHERE __key = $key").collect().toSeq
+    assert(point(1) === Seq(Row(1L, 10L)))
+    val before = compiles
+    assert(point(3) === Seq(Row(3L, 30L)))
+    assert(compiles - before === 0, "the second key compiled new classes")
+    graft.pipeline.KeyedStore.drop("lr_kv")
+  }
+
   test("explain shows the literal text, never ParamLiteral") {
     val df = byStatus(37)
     df.collect()
