@@ -1,90 +1,44 @@
 #!/usr/bin/env bash
-# One-command live-wire CI: stand up the three endpoints LiveWireSpec needs
-# (Kafka broker, Kinesis-compatible localstack, Elasticsearch) in containers,
-# run the env-gated live tests, and tear everything down.
+# One-command live-wire CI: stand up the endpoint LiveWireSpec needs
+# (Elasticsearch) in a container, run the env-gated live test, and tear it
+# down.
 #
-# The sandbox this repo is built in has zero egress, so LiveWireSpec CANCELS
-# its three live tests there ("LIVE WIRE UNTESTED HERE"). Anywhere with
-# Docker, this script turns those cancels into real passes: the SAME data
-# assertions the stub-backed specs pin in-sandbox, against real endpoints,
-# through the in-repo wire clients (KafkaWire — binary protocol, both the
-# pre-KIP-482 and flexible/compact encodings, negotiated; KinesisWire —
-# SigV4-signed JSON wire; ElasticShaped — REST). No kafka-clients, AWS SDK,
-# or es-hadoop jars involved.
+# Without ES_URL, LiveWireSpec CANCELS its live test ("LIVE WIRE UNTESTED
+# HERE"). Anywhere with Docker, this script turns that cancel into a real
+# pass: the SAME data assertions
+# ElasticShapedSpec pins offline against its stub, run against a real
+# endpoint through the production ElasticShaped REST client. No es-hadoop
+# jars involved.
 #
 # Usage: scripts/livewire.sh [--keep]
-#   --keep  leave the containers running after the tests (for iterating)
+#   --keep  leave the container running after the test (for iterating)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 KEEP=${1:-}
-NET=graft-livewire
 
 cleanup() {
   if [[ "$KEEP" != "--keep" ]]; then
-    docker rm -f graft-kafka graft-localstack graft-es >/dev/null 2>&1 || true
-    docker network rm "$NET" >/dev/null 2>&1 || true
+    docker rm -f graft-es >/dev/null 2>&1 || true
   fi
 }
 trap cleanup EXIT
 
-docker network create "$NET" >/dev/null 2>&1 || true
-
-echo "[livewire] starting kafka (KRaft, single node, plaintext :9092 + SASL_PLAINTEXT :9094)..."
-# SASL listener (r14): PLAIN + SCRAM-SHA-256 on :9094, exercised by the
-# env-gated SASL live test through KafkaWire's own RFC 4616/5802 client.
-# apache/kafka env mangling: '.'->'_', '_'->'__', '-'->'___' (KIP-906), so
-# listener.name.sasl_plaintext.* becomes KAFKA_LISTENER_NAME_SASL__PLAINTEXT_*.
-docker run -d --name graft-kafka --network "$NET" -p 9092:9092 -p 9094:9094 \
-  -e KAFKA_NODE_ID=1 \
-  -e KAFKA_PROCESS_ROLES=broker,controller \
-  -e KAFKA_CONTROLLER_QUORUM_VOTERS=1@localhost:9093 \
-  -e KAFKA_LISTENERS=PLAINTEXT://0.0.0.0:9092,CONTROLLER://0.0.0.0:9093,SASL_PLAINTEXT://0.0.0.0:9094 \
-  -e KAFKA_ADVERTISED_LISTENERS=PLAINTEXT://localhost:9092,SASL_PLAINTEXT://localhost:9094 \
-  -e KAFKA_CONTROLLER_LISTENER_NAMES=CONTROLLER \
-  -e KAFKA_LISTENER_SECURITY_PROTOCOL_MAP=PLAINTEXT:PLAINTEXT,CONTROLLER:PLAINTEXT,SASL_PLAINTEXT:SASL_PLAINTEXT \
-  -e KAFKA_SASL_ENABLED_MECHANISMS=PLAIN,SCRAM-SHA-256 \
-  -e KAFKA_LISTENER_NAME_SASL__PLAINTEXT_PLAIN_SASL_JAAS_CONFIG='org.apache.kafka.common.security.plain.PlainLoginModule required username="admin" password="admin-secret" user_admin="admin-secret";' \
-  -e KAFKA_LISTENER_NAME_SASL__PLAINTEXT_SCRAM___SHA___256_SASL_JAAS_CONFIG='org.apache.kafka.common.security.scram.ScramLoginModule required;' \
-  -e KAFKA_OFFSETS_TOPIC_REPLICATION_FACTOR=1 \
-  -e KAFKA_AUTO_CREATE_TOPICS_ENABLE=true \
-  apache/kafka:3.7.0 >/dev/null
-
-echo "[livewire] starting localstack (kinesis on :4566)..."
-docker run -d --name graft-localstack --network "$NET" -p 4566:4566 \
-  -e SERVICES=kinesis localstack/localstack:3 >/dev/null
-
 echo "[livewire] starting elasticsearch (single node, no security, :9200)..."
-docker run -d --name graft-es --network "$NET" -p 9200:9200 \
+docker run -d --name graft-es -p 9200:9200 \
   -e discovery.type=single-node -e xpack.security.enabled=false \
   -e ES_JAVA_OPTS="-Xms512m -Xmx512m" \
   docker.elastic.co/elasticsearch/elasticsearch:8.13.0 >/dev/null
 
-echo "[livewire] waiting for endpoints..."
+echo "[livewire] waiting for the endpoint..."
+ok=0
 for i in $(seq 1 60); do
-  ok=0
-  curl -sf http://localhost:9200 >/dev/null 2>&1 && ok=$((ok+1))
-  curl -sf http://localhost:4566/_localstack/health >/dev/null 2>&1 && ok=$((ok+1))
-  # kafka: the wire client negotiates on connect; just check the port
-  (exec 3<>/dev/tcp/localhost/9092) 2>/dev/null && ok=$((ok+1)) && exec 3>&- || true
-  [[ $ok -eq 3 ]] && break
+  curl -sf http://localhost:9200 >/dev/null 2>&1 && { ok=1; break; }
   sleep 2
 done
-[[ ${ok:-0} -eq 3 ]] || { echo "[livewire] endpoints not healthy in time"; exit 1; }
+[[ $ok -eq 1 ]] || { echo "[livewire] endpoint not healthy in time"; exit 1; }
 
-echo "[livewire] creating the SCRAM-SHA-256 user (admin) via the plaintext listener..."
-docker exec graft-kafka /opt/kafka/bin/kafka-configs.sh \
-  --bootstrap-server localhost:9092 --alter \
-  --add-config 'SCRAM-SHA-256=[password=admin-secret]' \
-  --entity-type users --entity-name admin
-
-echo "[livewire] running LiveWireSpec against the live endpoints..."
-KAFKA_BOOTSTRAP=localhost:9092 \
-KAFKA_SASL_BOOTSTRAP=localhost:9094 \
-KAFKA_SASL_USER=admin KAFKA_SASL_PASSWORD=admin-secret \
-KAFKA_SASL_MECHANISM=SCRAM-SHA-256 \
-AWS_ENDPOINT=http://localhost:4566 \
-AWS_ACCESS_KEY_ID=test AWS_SECRET_ACCESS_KEY=test AWS_REGION=us-east-1 \
+echo "[livewire] running LiveWireSpec against the live endpoint..."
 ES_URL=http://localhost:9200 \
 sbt "testOnly graft.pipeline.LiveWireSpec"
 

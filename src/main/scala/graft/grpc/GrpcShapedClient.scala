@@ -89,6 +89,22 @@ final class GrpcShapedClient(host: String, port: Int) {
         io.netty.util.ReferenceCountUtil.release(other)
         ()
     }
+    // netty's multiplexer delivers RST_STREAM as a user event, not a read
+    override def userEventTriggered(ctx: ChannelHandlerContext, evt: AnyRef): Unit = {
+      evt match {
+        case r: Http2ResetFrame =>
+          done.tryFailure(new RuntimeException(
+            s"stream reset by peer (error code ${r.errorCode()})"))
+        case _ =>
+      }
+      super.userEventTriggered(ctx, evt)
+    }
+    // A peer that dies mid-call closes the stream without trailers; without
+    // this the call's future would never complete. No-op after trailers.
+    override def channelInactive(ctx: ChannelHandlerContext): Unit = {
+      done.tryFailure(new RuntimeException("stream closed before grpc-status trailers"))
+      super.channelInactive(ctx)
+    }
     override def exceptionCaught(ctx: ChannelHandlerContext, cause: Throwable): Unit = {
       done.tryFailure(cause)
       ctx.close()

@@ -24,9 +24,9 @@ import graft.grpc.{GrpcShapedClient, ProtoLite}
   *   - the JVM side is [[graft.grpc.GrpcShapedClient]] — the SAME real
   *     HTTP/2 client the §2.4 gRPC seam uses (q168) — with messages in
   *     [[graft.grpc.ProtoLite]]'s `string payload = 1;` shape;
-  *   - the handler contract is IDENTICAL to [[PythonTransforms]]:
+  *   - the handler contract is the reference's:
   *     `transform_list(input_list) -> output_list`, one output per input,
-  *     in order — handlers written for either transport run on both.
+  *     in order.
   *
   * Flow control is FULL in both directions (r15, VERDICT r14 item 3 —
   * parity with the reference bridge's grpc-java flow control,
@@ -38,11 +38,8 @@ import graft.grpc.{GrpcShapedClient, ProtoLite}
   * so handler responses of ANY size flow (embeddings, generations), not
   * just bodies under the 65535-byte initial window. `batchBytes` still
   * bounds a batch's INPUT payload (UTF-8 bytes) so one batch's python
-  * round-trip stays memory-bounded on both sides.
-  *
-  * The stdin/stdout subprocess seam ([[PythonTransforms.mapUsingPython]])
-  * remains as the fallback transport — fewer moving parts, no newline
-  * restriction here though: gRPC frames carry arbitrary strings.
+  * round-trip stays memory-bounded on both sides. gRPC frames carry
+  * arbitrary strings, newlines included.
   */
 object PythonGrpcTransforms {
 
@@ -240,13 +237,12 @@ object PythonGrpcTransforms {
   }
 
   /** Rewrite STRING column `colName` through the user's python handler over
-    * the gRPC transport. Same signature family as
-    * [[PythonTransforms.mapUsingPython]]; `batchBytes` additionally bounds a
-    * batch's input payload in UTF-8 BYTES (what actually crosses the wire —
-    * counting String.length would let multibyte text triple the stated
-    * budget, ADVICE r14). Null values in the column are rejected with a
-    * named error — the handler contract is String => String; filter or
-    * `coalesce` nulls upstream.
+    * the gRPC transport, in batches of at most `batchSize` rows;
+    * `batchBytes` additionally bounds a batch's input payload in UTF-8
+    * BYTES (what actually crosses the wire — counting String.length would
+    * let multibyte text triple the stated budget, ADVICE r14). Null values
+    * in the column are rejected with a named error — the handler contract
+    * is String => String; filter or `coalesce` nulls upstream.
     */
   def mapUsingPythonGrpc(df: DataFrame, colName: String, handlerFile: String,
                          handlerFunction: String = "transform_list",

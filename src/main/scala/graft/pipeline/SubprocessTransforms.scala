@@ -50,16 +50,7 @@ object SubprocessTransforms {
     * preserving all other columns by the one-in-one-out ordering contract.
     */
   def transformColumn(df: DataFrame, colName: String, command: Seq[String],
-                      env: Map[String, String] = Map.empty): DataFrame =
-    transformColumnWith(df, colName, () => command, env)
-
-  /** Same, with the command resolved ON THE EXECUTOR — for workers whose
-    * file arguments are shipped via `SparkContext.addFile` and only resolve
-    * through `SparkFiles.get` inside the task (PythonTransforms does this).
-    */
-  private[pipeline] def transformColumnWith(df: DataFrame, colName: String,
-                                            command: () => Seq[String],
-                                            env: Map[String, String]): DataFrame = {
+                      env: Map[String, String] = Map.empty): DataFrame = {
     val schema = df.schema
     val idx = schema.fieldIndex(colName)
     require(schema(idx).dataType == org.apache.spark.sql.types.StringType,
@@ -70,7 +61,7 @@ object SubprocessTransforms {
       // row without materializing the partition
       val pending = new java.util.ArrayDeque[org.apache.spark.sql.Row]()
       val texts = rows.map { r => pending.addLast(r); r.getString(idx) }
-      transformPartition(command(), env)(texts).map { out =>
+      transformPartition(command, env)(texts).map { out =>
         val r = pending.removeFirst()
         val vals = r.toSeq.updated(idx, out)
         org.apache.spark.sql.Row.fromSeq(vals)

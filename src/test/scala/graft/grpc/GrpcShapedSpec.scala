@@ -2,6 +2,11 @@ package graft.grpc
 
 import graft.SparkSpec
 import graft.pipeline.BatchStage
+import io.netty.bootstrap.ServerBootstrap
+import io.netty.channel.{Channel, ChannelHandlerContext, ChannelInboundHandlerAdapter, ChannelInitializer, MultiThreadIoEventLoopGroup}
+import io.netty.channel.nio.NioIoHandler
+import io.netty.channel.socket.nio.NioServerSocketChannel
+import io.netty.handler.codec.http2.{DefaultHttp2ResetFrame, Http2Error, Http2FrameCodecBuilder, Http2MultiplexHandler}
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
@@ -96,6 +101,42 @@ class GrpcShapedSpec extends SparkSpec {
           (svc, batch) => GrpcServices.bidiStrings(svc, "/graft.Echo/Tag", batch)
         }.ds.collect().toSeq
       assert(out === (1 to 300).map(i => s"tag:v$i"))
+    }
+  }
+
+  test("wire level: a call whose stream the peer resets fails instead of hanging") {
+    // a server that answers every request stream with RST_STREAM(CANCEL)
+    val group = new MultiThreadIoEventLoopGroup(1, NioIoHandler.newFactory())
+    val server = new ServerBootstrap().group(group).channel(classOf[NioServerSocketChannel])
+      .childHandler(new ChannelInitializer[Channel] {
+        override def initChannel(ch: Channel): Unit = {
+          ch.pipeline().addLast(Http2FrameCodecBuilder.forServer().build(),
+            new Http2MultiplexHandler(new ChannelInitializer[Channel] {
+              override def initChannel(sc: Channel): Unit = {
+                sc.pipeline().addLast(new ChannelInboundHandlerAdapter {
+                  override def channelRead(ctx: ChannelHandlerContext, msg: AnyRef): Unit = {
+                    io.netty.util.ReferenceCountUtil.release(msg)
+                    ctx.writeAndFlush(new DefaultHttp2ResetFrame(Http2Error.CANCEL))
+                    ()
+                  }
+                })
+                ()
+              }
+            }))
+          ()
+        }
+      }).bind("127.0.0.1", 0).sync().channel()
+    val port = server.localAddress().asInstanceOf[java.net.InetSocketAddress].getPort
+    val c = new GrpcShapedClient("127.0.0.1", port)
+    try {
+      val call = c.unary("/graft.Echo/Upper", ProtoLite.encodeString("x"))
+      val e = intercept[RuntimeException](Await.result(call, 10.seconds))
+      assert(e.getMessage.contains("reset by peer"), s"reset not surfaced: $e")
+    } finally {
+      c.close()
+      server.close().sync()
+      group.shutdownGracefully(0, 100, java.util.concurrent.TimeUnit.MILLISECONDS)
+      ()
     }
   }
 }

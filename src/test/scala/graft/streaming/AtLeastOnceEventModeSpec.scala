@@ -57,6 +57,10 @@ class AtLeastOnceEventModeSpec extends SparkSpec {
     eventually(30000) { q.size >= 500 }
     val beforeKill = q.size
     job1.stop() // interrupts the long-running tasks mid-epoch — no commit
+    // continuous-mode writer tasks can still deliver after stop() returns;
+    // those rows belong to the pre-kill window, so wait for incarnation 1
+    // to go quiet before taking it
+    quiesce(q, quietMs = 1000, maxMs = 10000)
     val afterKill = snapshot(q)
 
     // incarnation 2: restart from the checkpoint; the committed offset is
@@ -104,6 +108,19 @@ class AtLeastOnceEventModeSpec extends SparkSpec {
     val b = Vector.newBuilder[Long]
     q.forEach(v => b += v)
     b.result()
+  }
+
+  /** Returns once `q`'s size has not changed for `quietMs`, or after `maxMs`. */
+  private def quiesce(q: ConcurrentLinkedQueue[Long], quietMs: Long, maxMs: Long): Unit = {
+    val end = System.currentTimeMillis + maxMs
+    var size = q.size
+    var stableSince = System.currentTimeMillis
+    while (System.currentTimeMillis - stableSince < quietMs &&
+           System.currentTimeMillis < end) {
+      Thread.sleep(100)
+      val now = q.size
+      if (now != size) { size = now; stableSince = System.currentTimeMillis }
+    }
   }
 
   private def eventually(ms: Long)(cond: => Boolean): Unit = {
