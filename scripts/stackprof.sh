@@ -1,32 +1,61 @@
 #!/usr/bin/env bash
-# Poor-man's flame profile for a running graft main: samples the forked JVM's
-# executor threads with jstack and histograms the hottest frames.
+# Sampling profile of a graft.Profile run with Java Flight Recorder, which
+# ships with the JDK: method samples every 1 ms from every thread, including
+# the driver-side work of each micro-batch (planning, code generation,
+# commit), histogrammed per thread group.
 #
-# This recipe found round 13's biggest win: the q176 "~130x at 100x" session
-# cost attributed to shuffle volume was actually one quadratic iterator —
-# 85% of sampled frames sat in insertSpan's rangeTo scan. Histogram first,
-# theorize second.
+# Usage (from the repository root; the arguments go to graft.Profile):
+#   scripts/stackprof.sh --reps 2 t q21_sliding_window
+#   scripts/stackprof.sh q150_stream_nexmark_hot
 #
-# Usage:
-#   1. start the workload:  SPARK_GRAFT_SF_DIR=... sbt "runMain graft.JobProfile qNNN" &
-#   2. once tasks are running:  scripts/stackprof.sh [samples=6] [interval_s=3]
-#
-# The forked JVM is found via jps (sbt runMain forks; the main's class name
-# shows up directly — sbt-launch.jar is excluded).
+# Prints, for each thread group (stream thread, executor tasks, AQE and
+# broadcast helpers, other), its sample count and hottest top frames, then
+# the path of the recording for `jfr print` / JDK Mission Control.
+# The settings are JDK's profile.jfc with method sampling at 1 ms.
 set -euo pipefail
-SAMPLES=${1:-6}
-INTERVAL=${2:-3}
+[[ $# -gt 0 ]] || { sed -n '2,14p' "$0"; exit 1; }
 
-PID=$(jps | grep -vE "sbt-launch|Jps" | awk '{print $1}' | head -1)
-[[ -n "$PID" ]] || { echo "no forked JVM found (is the workload running?)"; exit 1; }
-echo "sampling pid $PID ($(jps | grep "^$PID " | cut -d' ' -f2-)) ${SAMPLES}x every ${INTERVAL}s"
+OUT=$(mktemp -d -t graft-stackprof-XXXXXX)
+JFC="$OUT/profile-1ms.jfc"
+JFR="$OUT/profile.jfr"
+JAVA_HOME=${JAVA_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v java)")")")}
+# profile.jfc samples Java methods every 10 ms (20 ms for native)
+sed -e 's|<setting name="period" control="method-sampling-java-interval">[^<]*<|<setting name="period" control="method-sampling-java-interval">1 ms<|' \
+    -e 's|<setting name="period" control="method-sampling-native-interval">[^<]*<|<setting name="period" control="method-sampling-native-interval">1 ms<|' \
+  "$JAVA_HOME/lib/jfr/profile.jfc" > "$JFC"
+grep -q 'method-sampling-java-interval">1 ms<' "$JFC" || { echo "could not derive $JFC"; exit 1; }
 
-TMP=$(mktemp)
-trap 'rm -f "$TMP"' EXIT
-for i in $(seq 1 "$SAMPLES"); do
-  jstack "$PID" | grep -A 14 '"Executor task launch' | grep -E "^\s+at " >> "$TMP" || true
-  sleep "$INTERVAL"
-done
+sbt --batch "set javaOptions += \"-XX:StartFlightRecording=settings=$JFC,filename=$JFR,dumponexit=true\"" \
+  "runMain graft.Profile $*"
 
-echo "=== hottest frames (count, frame) ==="
-sort "$TMP" | uniq -c | sort -rn | head -25
+jfr print --json --events jdk.ExecutionSample --stack-depth 1 "$JFR" > "$OUT/samples.json"
+python3 - "$OUT/samples.json" <<'EOF'
+import collections, json, re, sys
+
+GROUPS = [
+    ("stream thread", re.compile(r"^stream execution thread")),
+    ("executor tasks", re.compile(r"^Executor task launch worker")),
+    ("AQE / broadcast helpers", re.compile(r"QueryStageCreator|broadcast-exchange|subquery")),
+]
+
+def group(thread):
+    return next((g for g, rx in GROUPS if rx.search(thread)), "other")
+
+samples = collections.Counter()
+frames = collections.defaultdict(collections.Counter)
+for ev in json.load(open(sys.argv[1]))["recording"]["events"]:
+    v = ev["values"]
+    g = group((v.get("sampledThread") or {}).get("javaName") or "")
+    stack = (v.get("stackTrace") or {}).get("frames") or []
+    top = stack[0]["method"] if stack else None
+    name = f'{top["type"]["name"]}.{top["name"]}' if top else "<no frame>"
+    samples[g] += 1
+    frames[g][name] += 1
+
+total = sum(samples.values())
+for g, n in samples.most_common():
+    print(f"=== {g}: {n} samples ({100.0 * n / max(total, 1):.1f}%) ===")
+    for name, c in frames[g].most_common(15):
+        print(f"{c:7d}  {name}")
+EOF
+echo "recording: $JFR"

@@ -17,6 +17,7 @@ object Plans {
     "q05_join_multiway" -> "chained broadcasts collapse into one probe-side pipeline",
     "q08_topn_per_key" -> "per-key top-k via window row_number — single shuffle, no group materialization",
     "q17_typed_topn" -> "custom Aggregator (bounded-PQ topN + O(1) linearTrend) still plans partial+final",
+    "q21_sliding_window" -> "sliding window() planned frame-first (graft.sql.FrameFirstWindows): one map-side hash per event into (5-min frame, event_type) partials, Expand fans each partial out to its 2 windows, a PartialMerge feeds the one (window, event_type) exchange",
     "q27_pattern_match" -> "CEP via per-key window lag — one shuffle on user_id",
     "q29_tfidf" -> "tf and df aggs + broadcast of the term dictionary",
     "q36_dedup_minhash_lsh" -> "LSH band-key join bounds candidate pairs; no all-pairs cross join",
@@ -81,7 +82,7 @@ object Plans {
     "q143_nexmark_filter" -> "NEXMark Q2: row-local predicate; at scale the auction%123 filter pushes into whatever source carries the bid stream",
     "q144_nexmark_local_item" -> "NEXMark Q3: persons (1/50th of the stream) filtered then BROADCAST into auctions — the big side never shuffles",
     "q145_nexmark_avg_category" -> "NEXMark Q4: bids shuffle ONCE on auction id for the winning-bid max; the category agg is 10 rows; avg over exact integer sums",
-    "q146_nexmark_hot_items" -> "NEXMark Q5: sliding window() expands each bid into 3 covering windows BEFORE the single (window, auction) hash-agg; hot filter is a window max over window-cardinality counts",
+    "q146_nexmark_hot_items" -> "NEXMark Q5: sliding window() planned frame-first — bids reduce per (20-min frame, auction), the frame partials expand into their 3 covering windows, then the single (window, auction) exchange; hot filter is a window max over window-cardinality counts",
     "q147_nexmark_avg_seller" -> "NEXMark Q6: per-seller rank window runs over the WINS table (auction-cardinality, ~3/50 of the stream) — raw bids never enter the ranking shuffle",
     "q148_nexmark_highest_bid" -> "NEXMark Q7: one 10-min tumbling max window + tie-keeping filter — a single exchange keyed on the window",
     "q149_nexmark_new_users" -> "NEXMark Q8: join keyed (seller, 12h-window-equality); persons broadcast — auctions never shuffle",

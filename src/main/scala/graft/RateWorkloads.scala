@@ -86,11 +86,9 @@ object RateWorkloads {
     * per event instead of the native sliding window's window/slide = 5).
     * Here the pane ring lives in one `flatMapGroupsWithState` state row per
     * auction: each event increments exactly one pane counter; emission
-    * combines the live panes. This is the streaming analog of the batch
-    * `SlidingPanes.slidingAgg` (the deductFn answer) — kept as a rate-probe
-    * variant to measure what the pane architecture buys on the engine
-    * (BASELINE.md NEXMark section); the oracle-checked sliding semantics
-    * stay on the native `window()` path.
+    * combines the live panes. Kept as a rate-probe variant to measure what
+    * the pane architecture buys on the engine (BASELINE.md NEXMark section);
+    * the oracle-checked sliding semantics stay on the native `window()` path.
     */
   def nexmarkQ5Panes(spark: SparkSession, rowsPerSecond: Long,
                      partitions: Int = 8): DataFrame = {

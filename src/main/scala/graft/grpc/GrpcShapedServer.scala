@@ -7,6 +7,8 @@ import io.netty.channel.socket.SocketChannel
 import io.netty.channel.socket.nio.NioServerSocketChannel
 import io.netty.handler.codec.http2._
 
+import scala.util.control.NonFatal
+
 /** In-process gRPC server over REAL HTTP/2 (netty frame codec) — the
   * sandbox stand-in for the reference's gRPC service endpoints
   * (extensions/grpc/.../GrpcServices.java): a unary method answers one
@@ -18,7 +20,8 @@ import io.netty.handler.codec.http2._
   * carry `:method POST`, `:path /Svc/Method`, `content-type
   * application/grpc`; response = HEADERS(:status 200) + DATA frames of
   * length-prefixed messages + trailers `grpc-status: 0` with END_STREAM;
-  * unknown paths answer `grpc-status: 12` (UNIMPLEMENTED).
+  * unknown paths answer `grpc-status: 12` (UNIMPLEMENTED), and a handler
+  * that throws ends its call with `grpc-status: 13` (INTERNAL).
   */
 final class GrpcShapedServer(unary: Map[String, Array[Byte] => Array[Byte]],
                              bidi: Map[String, Array[Byte] => Seq[Array[Byte]]] = Map.empty) {
@@ -75,6 +78,39 @@ final class GrpcShapedServer(unary: Map[String, Array[Byte] => Array[Byte]],
       ()
     }
 
+    private def respond(ctx: ChannelHandlerContext, msgs: Seq[Array[Byte]], endStream: Boolean): Unit =
+      (unary.get(path), bidi.get(path)) match {
+        case (Some(handler), _) =>
+          // gRPC unary = exactly one request message; a second on the same
+          // stream is a protocol violation → INTERNAL (13) per the spec.
+          if (msgs.size + (if (unaryMsg.isDefined) 1 else 0) > 1) {
+            sendTrailers(ctx, 13)
+          } else {
+            msgs.foreach(m => unaryMsg = Some(m))
+            if (endStream) {
+              unaryMsg match {
+                case Some(m) =>
+                  val response = GrpcFraming.encode(handler(m))
+                  sendHeaders(ctx)
+                  ctx.write(new DefaultHttp2DataFrame(response, false))
+                  sendTrailers(ctx, 0)
+                case None =>
+                  sendTrailers(ctx, 3) // no request message: INVALID_ARGUMENT
+              }
+            }
+          }
+        case (_, Some(f)) =>
+          sendHeaders(ctx)
+          msgs.foreach { m =>
+            f(m).foreach(r =>
+              ctx.write(new DefaultHttp2DataFrame(GrpcFraming.encode(r), false)))
+          }
+          ctx.flush()
+          if (endStream) sendTrailers(ctx, 0)
+        case _ =>
+          if (endStream) sendTrailers(ctx, 12)
+      }
+
     override def channelRead(ctx: ChannelHandlerContext, msg: AnyRef): Unit = msg match {
       case h: Http2HeadersFrame =>
         path = h.headers().path().toString
@@ -91,40 +127,21 @@ final class GrpcShapedServer(unary: Map[String, Array[Byte] => Array[Byte]],
       case d: Http2DataFrame =>
         val msgs = decoder.feed(d.content())
         d.release()
-        (unary.get(path), bidi.get(path)) match {
-          case (Some(_), _) =>
-            // gRPC unary = exactly one request message; a second on the same
-            // stream is a protocol violation → INTERNAL (13) per the spec.
-            if (msgs.size + (if (unaryMsg.isDefined) 1 else 0) > 1) {
-              sendTrailers(ctx, 13)
-            } else {
-              msgs.foreach(m => unaryMsg = Some(m))
-              if (d.isEndStream) {
-                unaryMsg match {
-                  case Some(m) =>
-                    sendHeaders(ctx)
-                    ctx.write(new DefaultHttp2DataFrame(
-                      GrpcFraming.encode(unary(path)(m)), false))
-                    sendTrailers(ctx, 0)
-                  case None =>
-                    sendTrailers(ctx, 3) // no request message: INVALID_ARGUMENT
-                }
-              }
-            }
-          case (_, Some(f)) =>
-            sendHeaders(ctx)
-            msgs.foreach { m =>
-              f(m).foreach(r =>
-                ctx.write(new DefaultHttp2DataFrame(GrpcFraming.encode(r), false)))
-            }
-            ctx.flush()
-            if (d.isEndStream) sendTrailers(ctx, 0)
-          case _ =>
-            if (d.isEndStream) sendTrailers(ctx, 12)
+        try respond(ctx, msgs, d.isEndStream)
+        catch {
+          case NonFatal(e) =>
+            // a throwing handler still ends the call, or the client would
+            // wait for trailers until its own timeout
+            GrpcShapedServer.log.warn(s"gRPC handler for $path failed", e)
+            sendTrailers(ctx, 13) // INTERNAL
         }
       case other =>
         io.netty.util.ReferenceCountUtil.release(other)
         ()
     }
   }
+}
+
+private object GrpcShapedServer {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[GrpcShapedServer])
 }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Two-stage sliding-window aggregation — the reference's own architecture
+/** Streaming sliding-window aggregation through frame partials, as chained
+  * stateful aggregations — the reference's own architecture
   * (accumulateByFrameP, Processors.java:474 + combineToSlidingWindowP,
   * Processors.java:528; SlidingWindowP.java frame-granular accumulators with
   * `combineFn` across frames): stage 1 reduces events to ONE partial
@@ -11,19 +12,17 @@ import org.apache.spark.sql.functions._
   * slide size; stage 2 fans each frame partial out to the size/slide sliding
   * windows that contain it and combines.
   *
-  * Why this exists when `window(ts, size, slide)` already works: Spark's
-  * built-in sliding window EXPLODES every event into size/slide window copies
-  * before the partial aggregation. For re-aggregable operations that is
-  * size/slide× more rows into the partial agg hash map; here the fan-out
-  * happens AFTER reduction, on frame partials — one row per (key, frame) —
-  * so the overlap factor multiplies a vastly smaller stream. At 100 TB with
-  * a 1-hour window sliding by 5 minutes (12 panes), the shuffle and hash-agg
-  * input shrink by up to 12× for the event-dominated stage. This is also
-  * exactly the role of the reference's `deductFn` (AggregateOperation.java:61)
-  * — avoiding recompute across overlapping windows — achieved by pane
-  * sharing instead of incremental subtraction (deduction needs an invertible
-  * accumulator; pane combine only needs associativity, so it also covers
-  * min/max/topN, which deductFn cannot).
+  * A batch sliding aggregate needs none of this: `window(ts, size, slide)`
+  * is planned frame-first by [[graft.sql.FrameFirstWindows]], which reduces
+  * events per (frame, key) before the window expansion. The streaming forms
+  * here keep frame partials in state (append mode), where the native plan
+  * keeps one state row per (window, key) and emits updates.
+  *
+  * This is also the role of the reference's `deductFn`
+  * (AggregateOperation.java:61) — avoiding recompute across overlapping
+  * windows — achieved by pane sharing instead of incremental subtraction
+  * (deduction needs an invertible accumulator; pane combine only needs
+  * associativity, so it also covers min/max/topN, which deductFn cannot).
   *
   * Requires `size` to be an integer multiple of `slide` (same constraint as
   * the reference's frame mapping, SlidingWindowDefinition.java:41-56).
@@ -68,40 +67,15 @@ object SlidingPanes {
         "the same constraint)")
   }
 
-  def slidingAgg(df: DataFrame, tsCol: String, size: String, slide: String,
-                 keys: Seq[Column], aggs: Seq[PaneAgg]): DataFrame = {
-    requireAligned(size, slide)
-    val sizeIv = expr(s"INTERVAL $size")
-    val slideIv = expr(s"INTERVAL $slide")
-    // stage 1: reduce to frame partials (tumbling slide-sized windows) —
-    // map-side combine applies here, on raw events, once
-    val partialCols = aggs.map(a => a.partial.as(s"__p_${a.name}"))
-    val partials = df
-      .groupBy(window(col(tsCol), slide).as("__frame") +: keys: _*)
-      .agg(partialCols.head, partialCols.tail: _*)
-    // stage 2: fan each frame out to the windows containing it (a frame at
-    // start fs belongs to windows starting fs-size+slide .. fs, step slide)
-    // and combine — the explode multiplies frame PARTIALS, not events
-    val expanded = partials.withColumn("window_start",
-      explode(sequence(
-        col("__frame.start") - sizeIv + slideIv, col("__frame.start"), slideIv)))
-    val combineCols = aggs.map(a => a.combine(col(s"__p_${a.name}")).as(a.name))
-    expanded
-      .groupBy(col("window_start") +: keys: _*)
-      .agg(combineCols.head, combineCols.tail: _*)
-      .withColumn("window_end", col("window_start") + sizeIv)
-  }
-
-  /** The STREAMING pane path — the same two-stage frame architecture as
-    * [[slidingAgg]] but over an unbounded watermarked stream, via Spark
-    * 3.4+ chained stateful aggregations (SPARK-40925): stage 1 is a
-    * slide-sized tumbling windowed agg (frame partials, stateful op #1),
-    * stage 2 a sliding window-of-window combine whose input is
-    * FRAME-cardinality, not event-cardinality (stateful op #2). Measured at
-    * 2× the native sliding `window()`'s sustained rate on the NEXMark Q5
-    * shape (16 M vs 8 M rows/s, BASELINE.md r8 addendum) because the
-    * size/slide event explosion never happens — the expansion multiplies
-    * frame partials inside the engine's window-of-window assignment.
+  /** The STREAMING pane path — the two-stage frame architecture over an
+    * unbounded watermarked stream, via Spark 3.4+ chained stateful
+    * aggregations (SPARK-40925): stage 1 is a slide-sized tumbling windowed
+    * agg (frame partials, stateful op #1), stage 2 a sliding
+    * window-of-window combine whose input is FRAME-cardinality, not
+    * event-cardinality (stateful op #2), so each event updates one state
+    * row. Measured at 2× the native sliding `window()`'s sustained rate on
+    * the NEXMark Q5 shape (16 M vs 8 M rows/s, BASELINE.md r8 addendum),
+    * before the native plan combined events per frame on its map side.
     *
     * Contract: `df` must already carry a watermark on `tsCol`; the chained
     * plan requires APPEND output mode, so results emit when the watermark

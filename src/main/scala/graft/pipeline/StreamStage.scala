@@ -201,6 +201,14 @@ final class StreamStageWithKey(
   /** Windowed (or plain keyed) aggregate. Tumbling/sliding → `window()`;
     * session → `session_window()` (gap-merged, Jet SessionWindowP semantics).
     * Output carries `window_start`/`window_end` like Jet's `KeyedWindowResult`.
+    *
+    * A sliding window whose size is a multiple of its slide is planned
+    * frame-first by [[graft.sql.FrameFirstWindows]], Jet's
+    * accumulateByFrameP + combineToSlidingWindowP: each event is aggregated
+    * once into its (frame, key) partial, and only the partials expand into
+    * the size/slide windows. The state keeps one row per (window, key), so
+    * every output mode works and each event still updates size/slide window
+    * states.
     */
   def aggregate(op: AggOp): DataFrame = {
     val groupCols: Seq[Column] = windowDef match {
@@ -221,12 +229,16 @@ final class StreamStageWithKey(
   }
 
   /** The sliding aggregate through the PANE path (chained stateful aggs —
-    * the reference's SlidingWindowP frame architecture; 2× the native
-    * sliding window's sustained rate, BASELINE.md r8). Only meaningful with
-    * a Sliding window definition; takes the pane vocabulary (partial +
-    * combine per aggregate) because an arbitrary AggOp column cannot be
-    * decomposed automatically. APPEND-mode results (watermark-finalized
-    * windows), unlike [[aggregate]]'s update-capable native plan.
+    * the reference's SlidingWindowP frame architecture): frame partials are
+    * kept in STATE, so an event updates one frame state, where
+    * [[aggregate]] combines frames per batch but keeps one state row per
+    * (window, key). BASELINE.md r8 measured 2× the sustained rate of the
+    * native sliding plan as it was before its frame-first map side. Only
+    * meaningful with a Sliding window definition; takes the pane vocabulary
+    * (partial + combine per aggregate) because an arbitrary AggOp column
+    * cannot be decomposed automatically. APPEND-mode results
+    * (watermark-finalized windows), unlike [[aggregate]]'s update-capable
+    * native plan.
     */
   def aggregatePaned(aggs: Seq[graft.operators.SlidingPanes.PaneAgg]): DataFrame =
     windowDef match {

@@ -62,21 +62,14 @@ object EventQueries {
       |GROUP BY 1, 2""".stripMargin
 
   // -------------------------------------------- q76 pane-based sliding window
-  /** The same sliding aggregation as q21, computed two-stage through frame
-    * partials (graft.operators.SlidingPanes — the reference's
-    * accumulateByFrameP/combineToSlidingWindowP architecture and its answer
-    * to `deductFn`): events reduce once into slide-sized panes, panes fan out
-    * to windows. Identical results to q21 by construction — the oracle is the
-    * same SQL — with size/slide× less data into the shuffle at scale.
+  /** The pane (frame) architecture of the reference — accumulateByFrameP +
+    * combineToSlidingWindowP, its answer to `deductFn` — is how the planner
+    * runs every aligned sliding `window()` ([[graft.sql.FrameFirstWindows]]):
+    * events reduce once per (5-minute frame, event_type) and the frame
+    * partials fan out to their two windows before the shuffle. So q76 is
+    * q21's query, and q21's oracle.
     */
-  val q76_sliding_panes: Q = (s, dir) => {
-    import s.implicits._
-    import graft.operators.SlidingPanes
-    SlidingPanes.slidingAgg(t(s, dir, "events"), "ts", "10 minutes", "5 minutes",
-        keys = Seq($"event_type"),
-        aggs = Seq(SlidingPanes.PaneAgg(count(lit(1)), sum(_), "n")))
-      .select(unix_timestamp($"window_start").as("pane_start"), $"event_type", $"n")
-  }
+  val q76_sliding_panes: Q = q21_sliding_window
 
   // ------------------------------------------------------- q22 session window
   /** Jet session windows (`SessionWindowDefinition`, SessionWindowP.java:83-84

@@ -188,9 +188,11 @@ object NexmarkQueries {
     * max the reference calls its toughest query (blog:110-113: "This is
     * Query 5, which showed a 99.99% latency 16 milliseconds in a 20-node
     * cluster"; single-node 25 M events/s). Batch form: Spark's sliding
-    * `window()` expands each bid into its 3 covering windows (the oracle
-    * unnests k ∈ {0,1,2} explicitly), one (window, auction) hash-agg, then a
-    * per-window max filter. Ties keep every hot auction — deterministic.
+    * `window()`, planned frame-first ([[graft.sql.FrameFirstWindows]]): bids
+    * reduce per (20-minute frame, auction), each frame partial fans out to
+    * its 3 covering windows (the oracle unnests k ∈ {0,1,2} per bid
+    * explicitly), one (window, auction) hash-agg, then a per-window max
+    * filter. Ties keep every hot auction — deterministic.
     */
   val q146_nexmark_hot_items: Q = (s, dir) => {
     import s.implicits._

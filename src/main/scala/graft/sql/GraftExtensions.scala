@@ -14,9 +14,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *   spark.sql("SELECT graft_dot(a.emb, b.emb) FROM ...")
   *   spark.sql("SELECT graft_minhash(token_hashes, 12) FROM ...")
   *
-  * It also injects [[LiftLiterals]], the physical rule that keeps comparison
-  * and projected literals out of generated code, so repeated statement shapes
-  * reuse their compiled classes.
+  * It also injects two physical rules: [[LiftLiterals]], which keeps
+  * comparison and projected literals out of generated code, so repeated
+  * statement shapes reuse their compiled classes; and [[FrameFirstWindows]],
+  * which aggregates a sliding `window()` per frame before the window
+  * expansion, so each event is hashed once instead of size/slide times.
   *
   * Activate with `.withExtensions(new GraftExtensions)` (GraftSession does) or
   * `spark.sql.extensions=graft.sql.GraftExtensions`.
@@ -28,6 +30,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectColumnar(_ => LiftLiterals.columnar)
+    ext.injectColumnar(_ => FrameFirstWindows.columnar)
+    ext.injectQueryStagePrepRule(_ => FrameFirstWindows)
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       info("graft_dot", "graft_dot(a, b) - dot product of two double arrays (codegen)"),

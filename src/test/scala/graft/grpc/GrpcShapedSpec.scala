@@ -79,6 +79,30 @@ class GrpcShapedSpec extends SparkSpec {
     }
   }
 
+  test("wire level: a throwing handler ends its call with INTERNAL") {
+    val boom = (_: Array[Byte]) => throw new IllegalStateException("handler failed")
+    val server = new GrpcShapedServer(
+      unary = Map("/graft.Boom/Upper" -> boom),
+      bidi = Map("/graft.Boom/Tag" -> ((m: Array[Byte]) =>
+        if (ProtoLite.decodeString(m) == "bad") boom(m) else Seq(m))))
+    val port = server.start()
+    val c = new GrpcShapedClient("127.0.0.1", port)
+    try {
+      // each call must end within 5 s, not wait out the client's timeout
+      val unary = c.unary("/graft.Boom/Upper", ProtoLite.encodeString("x"))
+      val eu = intercept[RuntimeException](Await.result(unary, 5.seconds))
+      assert(eu.getMessage.contains("grpc-status 13"), s"INTERNAL expected: $eu")
+      val bidi = c.bidi("/graft.Boom/Tag", Seq("ok", "bad", "ok").map(ProtoLite.encodeString))
+      val eb = intercept[RuntimeException](Await.result(bidi, 5.seconds))
+      assert(eb.getMessage.contains("grpc-status 13"), s"INTERNAL expected: $eb")
+      val ok = c.bidi("/graft.Boom/Tag", Seq(ProtoLite.encodeString("ok")))
+      assert(Await.result(ok, 5.seconds).map(ProtoLite.decodeString) === Seq("ok"))
+    } finally {
+      c.close()
+      server.stop()
+    }
+  }
+
   test("mapUsingServiceAsync routes rows through the gRPC channel (ordered ring)") {
     import spark.implicits._
     withServer { port =>

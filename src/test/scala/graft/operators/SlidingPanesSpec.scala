@@ -3,66 +3,28 @@ package graft.operators
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-/** Pane-based sliding aggregation must be indistinguishable from Spark's
-  * explode-based `window(ts, size, slide)` on every (window, key) — the
-  * two-stage plan is a pure efficiency transform (reference
-  * accumulateByFrameP + combineToSlidingWindowP equivalence).
+/** The pane operators' alignment check: `size` must be a whole number of
+  * slides in any interval grammar Spark's `window()` accepts. Their results
+  * are pinned by SlidingHotKeysStreamSpec, StreamingSpec and the q155/q158
+  * oracles; the batch sliding aggregate is native `window()`
+  * (FrameFirstWindowsSpec).
   */
 class SlidingPanesSpec extends SparkSpec {
 
-  import spark.implicits._
   import SlidingPanes.PaneAgg
-
-  test("pane-based sliding count+sum matches the built-in sliding window exactly") {
-    val events = Tables(spark, sf, "events")
-    val builtin = events
-      .groupBy(window($"ts", "10 minutes", "5 minutes").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"), sum($"value").as("s"))
-      .select($"w.start".as("window_start"), $"event_type", $"n", round($"s", 6).as("s"))
-    val panes = SlidingPanes.slidingAgg(events, "ts", "10 minutes", "5 minutes",
-        keys = Seq($"event_type"),
-        aggs = Seq(PaneAgg(count(lit(1)), sum(_), "n"),
-                   PaneAgg(sum($"value"), sum(_), "s")))
-      .select($"window_start", $"event_type", $"n", round($"s", 6).as("s"))
-    assert(panes.count() === builtin.count())
-    assert(panes.exceptAll(builtin).isEmpty && builtin.exceptAll(panes).isEmpty)
-  }
-
-  test("non-invertible aggregates (min/max) work through pane combine") {
-    // the case deductFn cannot express: min has no inverse, but pane combine
-    // only needs associativity
-    val events = Tables(spark, sf, "events")
-    val builtin = events
-      .groupBy(window($"ts", "10 minutes", "5 minutes").as("w"))
-      .agg(min($"value").as("lo"), max($"value").as("hi"))
-      .select($"w.start".as("window_start"), $"lo", $"hi")
-    val panes = SlidingPanes.slidingAgg(events, "ts", "10 minutes", "5 minutes",
-        keys = Seq.empty,
-        aggs = Seq(PaneAgg(min($"value"), min(_), "lo"),
-                   PaneAgg(max($"value"), max(_), "hi")))
-      .select($"window_start", $"lo", $"hi")
-    assert(panes.exceptAll(builtin).isEmpty && builtin.exceptAll(panes).isEmpty)
-  }
 
   test("alignment check accepts every interval grammar Spark's window() does") {
     val events = Tables(spark, sf, "events")
+    def panes(size: String, slide: String) = SlidingPanes.slidingAggStream(
+      events, "ts", size, slide, keys = Seq.empty, aggs = Seq(PaneAgg(count(lit(1)), sum(_), "n")))
     // multi-unit, sub-second, and week units must parse (r8 regression:
     // the single-unit regex rejected these even when correctly aligned)
-    SlidingPanes.slidingAgg(events, "ts", "1 hour 30 minutes", "30 minutes",
-      keys = Seq.empty, aggs = Seq(PaneAgg(count(lit(1)), sum(_), "n"))).count()
-    SlidingPanes.slidingAgg(events, "ts", "1 second", "500 milliseconds",
-      keys = Seq.empty, aggs = Seq(PaneAgg(count(lit(1)), sum(_), "n"))).count()
-    SlidingPanes.slidingAgg(events, "ts", "2 weeks", "1 week",
-      keys = Seq.empty, aggs = Seq(PaneAgg(count(lit(1)), sum(_), "n"))).count()
+    panes("1 hour 30 minutes", "30 minutes").count()
+    panes("1 second", "500 milliseconds").count()
+    panes("2 weeks", "1 week").count()
     // misalignment still rejected, including across mixed units
-    intercept[IllegalArgumentException] {
-      SlidingPanes.slidingAgg(events, "ts", "1 hour 30 minutes", "20 minutes",
-        keys = Seq.empty, aggs = Seq(PaneAgg(count(lit(1)), sum(_), "n")))
-    }
+    intercept[IllegalArgumentException](panes("1 hour 30 minutes", "20 minutes"))
     // month/year units have no fixed length → frames cannot align
-    intercept[IllegalArgumentException] {
-      SlidingPanes.slidingAgg(events, "ts", "1 month", "1 week",
-        keys = Seq.empty, aggs = Seq(PaneAgg(count(lit(1)), sum(_), "n")))
-    }
+    intercept[IllegalArgumentException](panes("1 month", "1 week"))
   }
 }
