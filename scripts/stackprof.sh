@@ -9,11 +9,14 @@
 #   scripts/stackprof.sh q150_stream_nexmark_hot
 #
 # Prints, for each thread group (stream thread, executor tasks, AQE and
-# broadcast helpers, other), its sample count and hottest top frames, then
-# the path of the recording for `jfr print` / JDK Mission Control.
+# broadcast helpers, other), its sample count and hottest top frames; then
+# every static initialiser (`<clinit>`) by the samples taken anywhere under
+# it (inclusive, all threads), so a one-off class initialisation shows up by
+# name instead of as the ICU or table-building frames it runs; then the path
+# of the recording for `jfr print` / JDK Mission Control.
 # The settings are JDK's profile.jfc with method sampling at 1 ms.
 set -euo pipefail
-[[ $# -gt 0 ]] || { sed -n '2,14p' "$0"; exit 1; }
+[[ $# -gt 0 ]] || { sed -n '2,17p' "$0"; exit 1; }
 
 OUT=$(mktemp -d -t graft-stackprof-XXXXXX)
 JFC="$OUT/profile-1ms.jfc"
@@ -28,7 +31,9 @@ grep -q 'method-sampling-java-interval">1 ms<' "$JFC" || { echo "could not deriv
 sbt --batch "set javaOptions += \"-XX:StartFlightRecording=settings=$JFC,filename=$JFR,dumponexit=true\"" \
   "runMain graft.Profile $*"
 
-jfr print --json --events jdk.ExecutionSample --stack-depth 1 "$JFR" > "$OUT/samples.json"
+# depth 64 (the recording's own stack depth): the <clinit> roll-up needs
+# the frames below the top one
+jfr print --json --events jdk.ExecutionSample --stack-depth 64 "$JFR" > "$OUT/samples.json"
 python3 - "$OUT/samples.json" <<'EOF'
 import collections, json, re, sys
 
@@ -43,6 +48,7 @@ def group(thread):
 
 samples = collections.Counter()
 frames = collections.defaultdict(collections.Counter)
+clinits = collections.Counter()
 for ev in json.load(open(sys.argv[1]))["recording"]["events"]:
     v = ev["values"]
     g = group((v.get("sampledThread") or {}).get("javaName") or "")
@@ -51,11 +57,18 @@ for ev in json.load(open(sys.argv[1]))["recording"]["events"]:
     name = f'{top["type"]["name"]}.{top["name"]}' if top else "<no frame>"
     samples[g] += 1
     frames[g][name] += 1
+    # a class initialised inside another's <clinit> counts for both
+    for t in {f'{f["method"]["type"]["name"]}.<clinit>'
+              for f in stack if f["method"]["name"] == "<clinit>"}:
+        clinits[t] += 1
 
 total = sum(samples.values())
 for g, n in samples.most_common():
     print(f"=== {g}: {n} samples ({100.0 * n / max(total, 1):.1f}%) ===")
     for name, c in frames[g].most_common(15):
         print(f"{c:7d}  {name}")
+print("=== static initialisers: samples under each <clinit>, all threads ===")
+for name, c in clinits.most_common(15):
+    print(f"{c:7d}  {100.0 * c / max(total, 1):5.1f}%  {name}")
 EOF
 echo "recording: $JFR"

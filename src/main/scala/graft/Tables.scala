@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, TimestampNTZType, TimestampType}
 
@@ -40,7 +40,7 @@ object Tables {
     require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "Tables requires spark.sql.session.timeZone=UTC (use GraftSession.tune): " +
         "naive-timestamp columns are labeled as UTC instants to match the oracle")
-    val df0 = spark.read.parquet(s"$dir/$name.parquet")
+    val df0 = readParquet(spark, spark.read, s"$dir/$name.parquet")
     val df =
       if (name == "events" && df0.schema("ts").dataType == LongType)
         df0.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -48,6 +48,15 @@ object Tables {
     df.schema.collect { case StructField(n, TimestampNTZType, _, _) => n }
       .foldLeft(df)((d, n) => d.withColumn(n, col(n).cast(TimestampType)))
   }
+
+  /** `reader.parquet(path)` without Spark's schema-inference job when `path`
+    * is one parquet file: the schema comes off its footer on the driver
+    * (Bridge.parquetFileSchema), where inference runs a one-task job to read
+    * that same footer. A directory keeps Spark's inference.
+    */
+  def readParquet(spark: SparkSession, reader: DataFrameReader, path: String): DataFrame =
+    org.apache.spark.sql.graftops.Bridge.parquetFileSchema(spark, path)
+      .fold(reader)(reader.schema(_)).parquet(path)
 
   /** Fan a CPU-dense pass out of an under-parallel scan (r20; guide §2.5
     * "input skew: one huge unsplittable file … repartition immediately after

@@ -14,9 +14,14 @@ import org.apache.spark.sql.graftops.Bridge
   */
 object TextFunctions {
 
-  /** Lowercased alphanumeric tokens; empty strings filtered out. */
+  /** Lowercased alphanumeric tokens: the maximal `[a-z0-9]` runs of
+    * `lower(text)`, as the native expr.Tokens (one byte scan, codegen'd;
+    * equal to the composed `filter(split(lower(text), "[^a-z0-9]+"), _ != "")`
+    * that the oracles replay — TokensSpec). Row-side code tokenizes with
+    * expr.TokensKernel.tokens, the same kernel.
+    */
   def tokens(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
+    Bridge.column(graft.functions.expr.Tokens(Bridge.expression(text)))
 
   /** Distinct token set (for Jaccard / MinHash style dedup). */
   def tokenSet(text: Column): Column = array_distinct(tokens(text))

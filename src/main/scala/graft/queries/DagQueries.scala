@@ -30,7 +30,7 @@ object DagQueries {
   /** The canonical Jet core-API word count (reference docs' hello-world of
     * DAG.java; processors from core/processor/Processors.java): tokenize →
     * accumulateByKeyP (local) → partitioned+distributed edge → combineByKeyP.
-    * Tokenizer matches q30's: lowercase, split on non-alphanumerics.
+    * Tokenizer is q30's: TextFunctions.tokens' kernel, called row-side.
     */
   val q170_dag_wordcount: Q = (s, dir) => {
     val text: RDD[Any] = t(s, dir, "documents")
@@ -39,9 +39,7 @@ object DagQueries {
     val dag = new DAG
     val tokenize = dag.newVertex("tokenize",
       Processors.flatMapP((line: String) =>
-        Traversers.traverseArray(
-          line.toLowerCase(java.util.Locale.ROOT)
-            .split("[^a-z0-9]+").filter(_.nonEmpty))))
+        Traversers.traverseArray(graft.functions.expr.TokensKernel.tokens(line))))
     val accumulate = dag.newVertex("accumulate",
       Processors.accumulateByKeyP((w: Any) => w, AggregateOp.counting))
     val combine = dag.newVertex("combine",

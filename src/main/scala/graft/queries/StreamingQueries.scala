@@ -1004,9 +1004,10 @@ object StreamingQueries {
     * log-likelihoods and priors rounded to 6 dp at fit time, folded in token
     * order at scoring time, final 6 dp round, ties on class name (the class
     * loop ascends with a strict `>`). The ORACLE IS q108's: stream scoring
-    * must reproduce the batch classifier bit-for-bit. Tokenization uses
-    * Locale.ROOT lowercasing to match the column expression's
-    * locale-independent lower().
+    * must reproduce the batch classifier bit-for-bit. The scorer tokenizes
+    * with TokensKernel.tokens, the kernel behind the fit side's
+    * TextFunctions.tokens, so both sides share one case mapping (Spark's
+    * ICU lower()).
     */
   val q113_stream_classify: Q = (s, dir) => {
     import s.implicits._
@@ -1041,8 +1042,7 @@ object StreamingQueries {
     StreamRunner.replayFiles(s, docs.select($"doc_id", $"text"), "doc_id", "append") { df =>
       df.as[(Long, String)].map { case (id, text) =>
         val (llm, dflt, pri, cls) = bc.value
-        val toks = text.toLowerCase(java.util.Locale.ROOT)
-          .split("[^a-z0-9]+").filter(_.nonEmpty)
+        val toks = graft.functions.expr.TokensKernel.tokens(text)
         var bestC = ""
         var bestS = Double.NegativeInfinity
         for (c <- cls) {

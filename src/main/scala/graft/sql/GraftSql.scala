@@ -98,7 +98,12 @@ final class GraftSql(spark: SparkSession) {
                 case cs => applyColumns(reader.schema(jsonSchema(cs)).json(path),
                   cs, byName = true)
               }
-            case "parquet" => applyColumns(reader.parquet(path), cols, byName = true)
+            // reader options could change how the footer converts: only a
+            // plain read takes the footer schema
+            case "parquet" => applyColumns(
+              if ((options - "path").isEmpty) graft.Tables.readParquet(spark, reader, path)
+              else reader.parquet(path),
+              cols, byName = true)
             // protobuf value format (reference: extensions/protobuf/.../
             // ProtobufSerializer.java): length-prefixed wire-format messages,
             // field number = declared column position + 1 — the declared

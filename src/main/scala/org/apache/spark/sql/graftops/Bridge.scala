@@ -152,6 +152,39 @@ object Bridge {
     if (found.isEmpty) None else Some(found.map(_.inputRDD.getNumPartitions).sum)
   }
 
+  /** The schema `spark.read.parquet(path)` infers, when `path` is ONE
+    * parquet file: its footer read on the driver and converted with Spark's
+    * own `readSchemaFromFooter` and the session's converter settings. Spark's
+    * inference would read the same footer inside a one-task
+    * `parallelize(...).collect()` job (`SchemaMergeUtils`). None for a
+    * directory or a missing path, which keep Spark's inference and errors.
+    */
+  def parquetFileSchema(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    spark match {
+      case cs: org.apache.spark.sql.classic.SparkSession =>
+        val conf = cs.sessionState.newHadoopConf()
+        val p = new org.apache.hadoop.fs.Path(path)
+        val fs = p.getFileSystem(conf)
+        val status =
+          try Some(fs.getFileStatus(p))
+          catch { case _: java.io.FileNotFoundException => None }
+        status.filter(_.isFile).map { st =>
+          val meta = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, meta),
+            new ParquetToSparkSchemaConverter(cs.sessionState.conf))
+        }
+      case _ => None
+    }
+  }
+
   /** The file-source root paths under a DataFrame's analyzed plan — the part
     * of the input identity that plan CANONICALIZATION erases (a parquet
     * LogicalRelation renders as `Relation [cols] parquet` with no path, and

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftops.Bridge
-import scala.jdk.CollectionConverters._
 
 /** `Tables.fanOutScan` decides from the physical plan's scan split count and
   * must never run a job to decide: `df.rdd.getNumPartitions` on an AQE plan
@@ -15,34 +13,6 @@ import scala.jdk.CollectionConverters._
 class FanOutScanSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private val tag = "graft.spec.fanout"
-
-  /** Spark jobs started by `body`, counted by a listener. The listener bus
-    * delivers in order, so once a later marker job's start has arrived,
-    * every start `body` caused has too.
-    */
-  private def jobsStartedBy(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      def tagged(t: String)(f: => Any): Unit = {
-        sc.setLocalProperty(tag, t)
-        try f finally sc.setLocalProperty(tag, null)
-      }
-      tagged("probe")(body)
-      tagged("marker")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("marker"), "listener never saw the marker job")
-      seen.asScala.count(_ == "probe")
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("fanOutScan on a frame holding a groupBy exchange starts no Spark job") {
     val agg = Tables(spark, sf, "documents").groupBy($"source").agg(count(lit(1)).as("n"))

@@ -156,8 +156,13 @@ class PlanSpec extends SparkSpec {
       "filter(", "size(", "lambdafunction(", "namedlambdavariable(", "cast(")
     val needles = """[a-z_][a-z_0-9]*\(""".r
       .findAllIn(expensiveSql.toLowerCase).toSet -- structural
-    assert(needles.exists(n => n == "split(" || n == "md5("),
-      s"needle derivation broke — tokenizer sql: $expensiveSql")
+    // the chain is the tokens kernel feeding the md5-half hash: both calls
+    // must be among the needles, named as the plans render them
+    val kernelCalls = Set(
+      functions.expr.Tokens(null).prettyName,
+      functions.expr.Md5Half(null).prettyName).map(_ + "(")
+    assert(kernelCalls.subsetOf(needles),
+      s"needle derivation broke — tokenizer sql: $expensiveSql, needles: $needles")
     Seq(
       "q29" -> queries.TextQueries.q29_tfidf(spark, sf),
       "q30" -> queries.TextQueries.q30_wordcount(spark, sf),

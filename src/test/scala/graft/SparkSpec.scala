@@ -32,6 +32,34 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
 
+  /** Spark jobs started by `body`, counted by a listener. The listener bus
+    * delivers in order, so once a later marker job's start has arrived,
+    * every start `body` caused has too.
+    */
+  def jobsStartedBy(body: => Any): Int = {
+    import scala.jdk.CollectionConverters._
+    val tag = "graft.spec.jobs"
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      def tagged(t: String)(f: => Any): Unit = {
+        sc.setLocalProperty(tag, t)
+        try f finally sc.setLocalProperty(tag, null)
+      }
+      tagged("probe")(body)
+      tagged("marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("marker"), "listener never saw the marker job")
+      seen.asScala.count(_ == "probe")
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = {
     // shared session across suites — do not stop; just clear leftover streams
     graft.pipeline.JobRegistry.stopAll()

@@ -11,6 +11,12 @@ import org.apache.spark.sql.functions._
   */
 object ComposedForms {
 
+  /** Lowercase, regex split, drop empties (Tokens' reference; the oracles'
+    * `list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')`).
+    */
+  def tokens(text: Column): Column =
+    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
+
   /** Left-to-right fold of x·y (DotProduct's reference). */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
