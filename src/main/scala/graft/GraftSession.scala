@@ -98,13 +98,6 @@ object GraftSession {
       // bound native memory: one shared block cache across all loaded stores
       .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
 
-  def clusterTune(b: SparkSession.Builder, totalCores: Int): SparkSession.Builder =
-    tune(b, shufflePartitions = totalCores * 3)
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (64L * 1024 * 1024).toString)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-
   /** Local task slots for every graft main: `SPARK_GRAFT_CPUS`, else every
     * available processor.
     */

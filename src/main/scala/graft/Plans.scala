@@ -400,8 +400,30 @@ object Plans {
       .map("%02x".format(_)).mkString
   }
 
-  /** The headline (batch) query names covered by the fingerprint gate. */
-  def fingerprinted: Seq[String] = headline.map(_._1)
+  /** Run-independent text of an explain string, so a regenerated PLANS.md
+    * differs only where a plan did. Each id kind — expression ids (`#12`),
+    * `plan_id=`, query-stage ids, codegen stage ids, RDD ids and
+    * lambda-variable numbers — is renumbered by first appearance, so
+    * references inside the plan still match; object hashes
+    * (`TopN@1a2b3c4d`, `$$Lambda$12/0x…`) are dropped.
+    */
+  def stableText(plan: String): String = {
+    val unhashed = plan
+      .replaceAll("""\$\$Lambda(\$\d+)?/0x[0-9a-f]+""", "\\$\\$Lambda")
+      .replaceAll("""(?<=[\w$])@[0-9a-f]{4,}\b""", "")
+    Seq(
+      """(#)(\d+)""",
+      """(plan_id=)(\d+)""",
+      """(\[codegen id : )(\d+)""",
+      """(RDD\[)(\d+)""",
+      """(lambda [A-Za-z]+_)(\d+)""",
+      """(?m)(^\(\d+\) \w*QueryStage\n(?:(?!\(\d+\) ).*\n)*?Arguments: )(\d+)$"""
+    ).foldLeft(unhashed) { (text, id) =>
+      val seen = collection.mutable.Map.empty[String, Int]
+      id.r.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size + 1)))
+    }
+  }
 
   /** Parse the fingerprint table out of a PLANS.md text. */
   def parseFingerprints(plansMd: String): Map[String, String] =
@@ -452,8 +474,8 @@ object Plans {
       fingerprints += (name -> fingerprint(df)) // BEFORE execution (Verify compares pre-execution too)
       df.collect() // let AQE finalize
       sb.append(s"\n## $name\n\n_${note}_\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(8000))
+      sb.append(stableText(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)).take(8000))
       sb.append("\n```\n")
     }
     sb.append("\n# Plan fingerprints\n\n")

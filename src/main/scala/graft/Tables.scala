@@ -86,10 +86,4 @@ object Tables {
       case _ => df
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` queries see the same names
-    * the DuckDB oracle sees.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -63,8 +63,8 @@ object RoutingPolicy {
 
 /** Jet `Edge` (core/Edge.java:68): connects `source` ordinal to `destination`
   * ordinal and carries the routing/priority configuration the planner uses.
-  * The fluent mutators mirror Edge.java exactly; `local()`/`distributed()` are
-  * recorded for parity but compile identically (see RoutingPolicy.Partitioned).
+  * The fluent mutators mirror Edge.java; `distributed()` is accepted for
+  * parity and changes nothing (see RoutingPolicy.Partitioned).
   */
 final class Edge private (
     val source: Vertex,
@@ -76,8 +76,6 @@ final class Edge private (
   private var _priority: Int = 0
   private var _routing: RoutingPolicy = RoutingPolicy.Unicast
   private var _keyFn: Any => Any = _
-  private var _allToOneKey: Any = _
-  private var _distributed: Boolean = false
   private var _comparator: Ordering[Any] = _
 
   /** Edge.java:150 `to(destination)`. */
@@ -116,7 +114,6 @@ final class Edge private (
   /** Edge.java:335: all items to ONE instance — partitioned on a constant. */
   def allToOne(key: Any): Edge = {
     _routing = RoutingPolicy.Partitioned
-    _allToOneKey = key
     _keyFn = _ => key
     this
   }
@@ -127,9 +124,6 @@ final class Edge private (
   /** Edge.java:356. */
   def isolated(): Edge = { _routing = RoutingPolicy.Isolated; _keyFn = null; this }
 
-  /** Edge.java:386 `fanout`: distributed broadcast — same compile here. */
-  def fanout(): Edge = { _routing = RoutingPolicy.Broadcast; _distributed = true; this }
-
   /** Edge.java:375 `ordered(comparator)`: receiver merges inbound streams in
     * order. Spark compile: per-partition sort of this edge's stream before the
     * inbox, executed inside the shuffle's ExternalSorter (spill-aware — disk-
@@ -139,14 +133,13 @@ final class Edge private (
     */
   def ordered(comparator: Ordering[Any]): Edge = { _comparator = comparator; this }
 
-  /** Edge.java:430/:455: recorded for parity; partitioning compiles the same. */
-  def local(): Edge = { _distributed = false; this }
-  def distributed(): Edge = { _distributed = true; this }
-  def isDistributed: Boolean = _distributed
+  /** Edge.java:455: a no-op here — a partitioned edge is already a Spark
+    * shuffle, which crosses executors.
+    */
+  def distributed(): Edge = this
 
   def getRoutingPolicy: RoutingPolicy = _routing
   def getKeyFn: Any => Any = _keyFn
-  def getAllToOneKey: Any = _allToOneKey
   def getOrderComparator: Ordering[Any] = _comparator
 
   override def toString: String = {
@@ -186,24 +179,12 @@ final class DAG extends Iterable[Vertex] with Serializable {
 
   private val vertices = mutable.LinkedHashMap.empty[String, Vertex]
   private val edgeList = mutable.ArrayBuffer.empty[Edge]
-  private var uniqueCounter = 0
 
   /** DAG.java:96. */
   def newVertex(name: String, supplier: () => Processor): Vertex = {
     val v = Vertex(name, supplier)
     vertex(v)
     v
-  }
-
-  /** DAG.java:114: suffixes the name to make it unique. */
-  def newUniqueVertex(namePrefix: String, supplier: () => Processor): Vertex = {
-    uniqueCounter += 1
-    var candidate = s"$namePrefix-$uniqueCounter"
-    while (vertices.contains(candidate)) {
-      uniqueCounter += 1
-      candidate = s"$namePrefix-$uniqueCounter"
-    }
-    newVertex(candidate, supplier)
   }
 
   /** DAG.java:183. */
@@ -242,10 +223,6 @@ final class DAG extends Iterable[Vertex] with Serializable {
     require(vertices.contains(vertexName), s"no vertex $vertexName")
     edgeList.filter(_.source.name == vertexName).toSeq
   }
-
-  /** DAG.java:280. */
-  def getVertex(vertexName: String): Vertex = vertices.getOrElse(vertexName,
-    throw new IllegalArgumentException(s"no vertex $vertexName"))
 
   def edges: Seq[Edge] = edgeList.toSeq
 

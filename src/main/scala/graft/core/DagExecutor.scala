@@ -38,7 +38,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object DagExecutor {
 
-  /** Hard cap on items a broadcast/fanout edge may carry (build sides are
+  /** Hard cap on items a broadcast edge may carry (build sides are
     * dimension-table-sized; at 100 TB the probe side streams, never this).
     */
   val MaxBroadcastItems: Int = 4 << 20
@@ -50,7 +50,7 @@ object DagExecutor {
   private[core] final case class RddSeg(ordinal: Int) extends Seg
 
   /** Compile every vertex to its output RDD. Compilation is lazy with ONE
-    * documented exception: a broadcast/fanout edge materializes its source
+    * documented exception: a broadcast edge materializes its source
     * eagerly at compile time (`take(maxBroadcastItems + 1)` is a real Spark
     * action) — the build side must exist on the driver before it can be
     * broadcast, exactly like Spark SQL's own BroadcastExchange. Everything
@@ -263,8 +263,8 @@ object DagExecutor {
     val n = math.max(src.getNumPartitions, 1)
     val keyed = src.mapPartitionsWithIndex((i, it) => it.map(x => ((i, x), true)))
     val part = new Partitioner {
-      def numPartitions: Int = n
-      def getPartition(key: Any): Int = key.asInstanceOf[(Int, Any)]._1
+      override def numPartitions: Int = n
+      override def getPartition(key: Any): Int = key.asInstanceOf[(Int, Any)]._1
     }
     implicit val ord: Ordering[(Int, Any)] = new Ordering[(Int, Any)] {
       def compare(a: (Int, Any), b: (Int, Any)): Int = {
@@ -337,8 +337,8 @@ private[core] final case class KeyRoute(k: Any)
 private[core] final case class WmRoute(pid: Int)
 
 private[core] final class RoutePartitioner(p: Int) extends Partitioner {
-  def numPartitions: Int = p
-  def getPartition(key: Any): Int = key match {
+  override def numPartitions: Int = p
+  override def getPartition(key: Any): Int = key match {
     case WmRoute(pid) => pid
     case KeyRoute(null) => 0
     case KeyRoute(k) =>
@@ -373,8 +373,8 @@ private[core] final class WatermarkCoalescer(totalSenders: Int) {
   */
 private[core] final class KeyFnPartitioner(keyFn: Any => Any, p: Int)
     extends Partitioner {
-  def numPartitions: Int = p
-  def getPartition(key: Any): Int = {
+  override def numPartitions: Int = p
+  override def getPartition(key: Any): Int = {
     val k = keyFn(key)
     if (k == null) 0
     else {

@@ -18,12 +18,6 @@ package graft.core
   */
 trait Processor extends Serializable {
 
-  /** Processor.java:141 — all our processors run on task threads; recorded for
-    * API parity (a non-cooperative processor is allowed to block, which a Spark
-    * task may also do).
-    */
-  def isCooperative: Boolean = true
-
   /** Processor.java:158. Called once, before any process call. */
   def init(outbox: Outbox, context: Processor.Context): Unit = ()
 

@@ -163,62 +163,6 @@ object Processors {
       }
     }
 
-  /** Processors.java:266 `accumulateP`: stage 1 of the two-stage global
-    * aggregate — emits the bare accumulator.
-    */
-  def accumulateP[A](op: AggregateOp[A, _]): () => Processor = () =>
-    new AbstractProcessor {
-      private var acc: A = _
-      private var seeded = false
-      private var emitted = false
-      override protected def tryProcess(ordinal: Int, item: Any): Boolean = {
-        if (!seeded) { acc = op.createFn(); seeded = true }
-        acc = op.accumulateFn(acc, item)
-        true
-      }
-      override def complete(): Boolean = {
-        if (emitted) true
-        else {
-          if (!seeded) { acc = op.createFn(); seeded = true }
-          emitted = tryEmit(acc)
-          emitted
-        }
-      }
-    }
-
-  /** Processors.java:292 `combineP`: stage 2 — combines accumulators, exports. */
-  def combineP[A, R](op: AggregateOp[A, R]): () => Processor = () =>
-    new AbstractProcessor {
-      private var acc: A = _
-      private var seeded = false
-      private var emitted = false
-      override protected def tryProcess(ordinal: Int, item: Any): Boolean = {
-        if (!seeded) { acc = item.asInstanceOf[A]; seeded = true }
-        else acc = op.combineFn(acc, item.asInstanceOf[A])
-        true
-      }
-      override def complete(): Boolean = {
-        if (emitted) true
-        else {
-          if (!seeded) { acc = op.createFn(); seeded = true }
-          emitted = tryEmit(op.exportFn(acc))
-          emitted
-        }
-      }
-    }
-
-  /** Processors.java:323 `aggregateByKeyP` (single-stage grouped; use behind a
-    * partitioned edge). `exportFn(key, result)` shapes the output item, like
-    * the reference's `mapToOutputFn`.
-    */
-  def aggregateByKeyP[K, A, R](
-      keyFn: Any => K,
-      op: AggregateOp[A, R],
-      exportFn: (K, R) => Any): () => Processor = () =>
-    new GroupByKeyProcessor[K, A](keyFn, (a, t) => op.accumulateFn(a, t), op.createFn) {
-      override protected def exportEntry(k: K, a: A): Any = exportFn(k, op.exportFn(a))
-    }
-
   /** Processors.java:353 `accumulateByKeyP`: stage 1 grouped — emits
     * (key, accumulator) pairs for the combine stage.
     */

@@ -135,18 +135,6 @@ object Traversers {
 
   /** Traversers.java:104-style varargs `traverseItems`. */
   def traverseItems[T](items: T*): Traverser[T] = traverseIterable(items)
-
-  /** Traversers.java:131 `lazy`: defers creating the inner traverser until the
-    * first `next()` — the standard trick for emitting state captured at
-    * complete() time.
-    */
-  def lazyT[T](supplier: () => Traverser[T]): Traverser[T] = new Traverser[T] {
-    private var inner: Traverser[T] = _
-    def next(): T = {
-      if (inner == null) inner = supplier()
-      inner.next()
-    }
-  }
 }
 
 /** Jet `AppendableTraverser` (core/AppendableTraverser.java): a small FIFO the

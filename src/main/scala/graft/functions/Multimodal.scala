@@ -8,13 +8,12 @@ import org.apache.spark.sql.functions._
   *
   * Image formats the JDK ships codecs for (PNG/BMP/GIF via `javax.imageio`)
   * are decoded FOR REAL in `decodeImages` — true raster width/height/bands
-  * from parsing the bytes. Formats needing external codecs (video, JPEG2000,
-  * audio) stay behind `decodeStub`, a clearly-marked deterministic FAKE —
-  * but everything around it is the real production shape: binary columns
-  * flow through parquet scans column-pruned, the decoder runs per-partition
-  * (one "model/codec handle" per task, the mapPartitions service pattern),
-  * and outputs are a typed struct per item. Swapping `decodeStub` for a
-  * JNI/FFmpeg call changes no plumbing.
+  * from parsing the bytes; WAV/AIFF/AU likewise in `decodeAudio`. Formats
+  * needing external codecs (video, JPEG2000, compressed audio samples) have
+  * no decoder here. Each decoder runs per-partition (one "model/codec
+  * handle" per task, the mapPartitions service pattern) over column-pruned
+  * parquet scans and emits a typed struct per item, so a JNI/FFmpeg decoder
+  * would slot in with no plumbing change.
   *
   * Scale notes: binary payloads dominate row size — `spark.sql.files.
   * maxPartitionBytes` governs split sizing, and the decode stage is a pure map
@@ -22,30 +21,6 @@ import org.apache.spark.sql.functions._
   * content hash so re-decodes are incremental.
   */
 object Multimodal {
-
-  /** Typed decoded-media record (the schema a real decoder would emit). */
-  final case class MediaFeatures(
-      media_id: Long,
-      n_bytes: Long,
-      content_md5: String,
-      // STUB fields: a real decoder emits true width/height/duration here
-      fake_width: Int,
-      fake_height: Int)
-
-  /** Deterministic FAKE decode of one payload — stands in for image/audio
-    * decoding (`???` in spirit): derives pseudo-dimensions from the byte length
-    * so results are reproducible in any engine.
-    */
-  def decodeStub(id: Long, bytes: Array[Byte]): MediaFeatures = {
-    val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-      .map("%02x".format(_)).mkString
-    MediaFeatures(
-      media_id = id,
-      n_bytes = bytes.length.toLong,
-      content_md5 = md5,
-      fake_width = (bytes.length % 64) + 1,
-      fake_height = ((bytes.length * 7) % 64) + 1)
-  }
 
   /** Typed record of a REAL image decode (see `decodeImages`). */
   final case class ImageFeatures(
@@ -58,12 +33,11 @@ object Multimodal {
     * JDK, so this path is NOT a stub: the payload bytes are parsed as an
     * actual image and the true raster dimensions come back. Undecodable or
     * NULL payloads are skipped (a corrupt image must not kill a 100 TB
-    * decode job — count them from the input/output row delta). Video and
-    * formats needing external codecs stay on `decodeStub`.
+    * decode job — count them from the input/output row delta).
     *
-    * Same scale shape as `decodeAll`: one pass, mapPartitions, no shuffle;
-    * the in-memory stream cache is disabled once per partition (ImageIO
-    * otherwise spills temp files per image).
+    * One pass, mapPartitions, no shuffle; the in-memory stream cache is
+    * disabled once per partition (ImageIO otherwise spills temp files per
+    * image).
     */
   def decodeImages(df: DataFrame, idCol: String, binCol: String): Dataset[ImageFeatures] = {
     import df.sparkSession.implicits._
@@ -199,8 +173,8 @@ object Multimodal {
     * and the true frame count / rate / channel count come back
     * (duration_us = frames·1,000,000/rate, exact integer when rate divides).
     * Undecodable payloads are skipped, like [[decodeImages]]; compressed
-    * codecs (mp3/aac/opus) need external libraries and stay on
-    * [[decodeStub]] — the documented boundary.
+    * codecs (mp3/aac/opus) need external libraries — the documented
+    * boundary.
     */
   /** Canonical-RIFF fast path: walk the chunk list, read `fmt ` (PCM only)
     * and size `data` — a ~40-line lock-free header parse. Returns null for
@@ -245,7 +219,7 @@ object Multimodal {
   // metadata every training-data audio pipeline actually filters on. This
   // parse is REAL (it must walk every frame using the header's own
   // bitrate/rate/padding arithmetic to count them); only PCM extraction
-  // stays on decodeStub.
+  // needs a codec.
 
   private val Mp3BitrateV1L3 =
     Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
@@ -409,22 +383,6 @@ object Multimodal {
       }.toDF("media_id", "phash")
   }
 
-  /** Batch decode: mapPartitions so a real implementation amortizes one codec/
-    * model handle per task (the Jet `mapUsingService` pattern, SURVEY §2.4).
-    * Input: (id, payload) binary rows; output: typed feature Dataset.
-    */
-  def decodeAll(df: DataFrame, idCol: String, binCol: String): Dataset[MediaFeatures] = {
-    import df.sparkSession.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // real impl: val codec = Codec.open() here, once per partition.
-        // NULL payloads are normal in real corpora — skip them instead of
-        // letting one null row NPE the whole decode job
-        it.filter(_._2 != null).map { case (id, bytes) => decodeStub(id, bytes) }
-      }
-  }
-
   /** Feature extraction over the raw payload bytes: a 16-bin byte histogram
     * normalized by length — a REAL (not stubbed) content feature computed the
     * way an embedding model would run (mapPartitions, one pass over the bytes,
@@ -462,9 +420,13 @@ object Multimodal {
       .flatMap { case (id, bytes) =>
         if (bytes == null) Iterator.empty
         else bytes.grouped(frameBytes).take(maxFrames).zipWithIndex.map {
-          case (frame, i) => (id, i, frame.length, decodeStub(id, frame).content_md5)
+          case (frame, i) => (id, i, frame.length, md5Hex(frame))
         }
       }
       .toDF(idCol, "frame_no", "frame_bytes", "frame_md5")
   }
+
+  private def md5Hex(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(bytes)
+      .map("%02x".format(_)).mkString
 }

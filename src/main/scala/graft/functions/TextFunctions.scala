@@ -54,14 +54,6 @@ object TextFunctions {
     // engines split identically on any input
     size(filter(split(text, "[ \\t\\n\\f\\r]+"), t => t =!= ""))
 
-  /** BPE-ish subword count: runs of letters, runs of digits, and single
-    * non-alphanumeric non-space characters each count as one token — a cheap,
-    * deterministic proxy for BPE vocabulary pressure.
-    */
-  def bpeishTokenCount(text: Column): Column =
-    size(filter(split(lower(text), "(?<=[a-z0-9])(?=[^a-z0-9])|(?<=[^a-z0-9])(?=[a-z0-9])|\\s+"),
-      t => trim(t) =!= ""))
-
   /** Word k-grams ("shingles") of the token sequence, joined by single spaces.
     * Documents with fewer than k tokens yield an empty array — the guard matters:
     * `sequence(0, size-k)` with size < k would build a descending sequence and

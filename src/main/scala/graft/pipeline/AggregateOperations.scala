@@ -98,12 +98,10 @@ object AggregateOperations {
   def summingDouble(c: Column, as: String = "sum"): AggOp =
     one(sum(c.cast("double")).as(as))
 
-  /** averagingLong / averagingDouble (:364/:411) */
+  /** averagingLong (:364) */
   def averaging(c: Column, as: String = "avg"): AggOp = one(avg(c).as(as))
   def averagingLong(c: Column, as: String = "avg"): AggOp =
     one(avg(c.cast("long")).as(as))
-  def averagingDouble(c: Column, as: String = "avg"): AggOp =
-    one(avg(c.cast("double")).as(as))
 
   /** Jet `mapping` (:882): transform each item before the downstream op.
     * Catalyst does this natively — ANY expression can be an aggregate's
@@ -210,15 +208,6 @@ object AggregateOperations {
   def toSet(c: Column, as: String = "set"): AggOp =
     one(array_sort(collect_set(c)).as(as))
 
-  /** toCollection (:758): Jet takes a collection supplier; the Spark analog
-    * collects the array column and lets the caller shape it with a
-    * `finish` transform (e.g. `array_sort` for a TreeSet-like, identity for
-    * ArrayList — which is exactly [[toList]]).
-    */
-  def toCollection(c: Column, finish: Column => Column = identity,
-                   as: String = "collection"): AggOp =
-    one(finish(collect_list(c)).as(as))
-
   /** sorting (:1286): ascending list of the group's values. */
   def sorting(c: Column, as: String = "sorted"): AggOp =
     one(sort_array(collect_list(c)).as(as))
@@ -249,10 +238,6 @@ object AggregateOperations {
                as: String = "reduced"): AggOp =
     one(reduce(collect_list(c), zero, merge).as(as))
 
-  /** distinct count — Jet models it as aggregate-with-distinct (SQL layer). */
-  def countingDistinct(c: Column, as: String = "count_distinct"): AggOp =
-    one(count_distinct(c).as(as))
-
   /** allOf (:1337, :1419): compose any number of ops into one pass. The
     * varargs form IS the `allOfBuilder` — Jet's builder exists to thread
     * Java tag types through; Scala varargs + named columns need none.
@@ -269,17 +254,4 @@ object AggregateOperations {
     def add(op: AggOp): AllOfBuilder = new AllOfBuilder(ops :+ op)
     def build(): AggOp = AggOp(ops.flatMap(_.columns))
   }
-
-  /** toAggregator / toCollector (:1519/:1478) — Jet's JDK-interop escape
-    * hatches (wrap a java.util.stream.Collector / expose the op as one).
-    * The Spark analog of "bring your own accumulation contract" is a typed
-    * `org.apache.spark.sql.expressions.Aggregator` registered via
-    * `functions.udaf` — see `graft.pipeline.typed.TypedAggs` (topN,
-    * linearTrend, etc. are implemented exactly that way); this wraps one
-    * as an AggOp column.
-    */
-  def fromAggregator[IN: scala.reflect.runtime.universe.TypeTag, BUF, OUT](
-      agg: org.apache.spark.sql.expressions.Aggregator[IN, BUF, OUT],
-      c: Column, as: String = "agg"): AggOp =
-    one(org.apache.spark.sql.functions.udaf(agg).apply(c).as(as))
 }

@@ -58,13 +58,6 @@ object AssertionSinks {
     }
   }
 
-  /** Jet `assertCollected` (AssertionSinks.java:156): hand the full collected
-    * result to a caller assertion.
-    */
-  def assertCollected(assertion: Seq[Row] => Unit): Sink = new Sink {
-    def write(df: DataFrame): Unit = assertion(df.collect().toSeq)
-  }
-
   /** Jet `assertCollectedEventually` (AssertionSinks.java:196): for unbounded
     * stages — start the stream into a memory sink and poll until the assertion
     * passes or the timeout trips. Passes as soon as the predicate holds on any

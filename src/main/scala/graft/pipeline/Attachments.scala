@@ -49,11 +49,9 @@ object Attachments {
     spark.sparkContext.addFile(path, true)
 
   /** Task side (valid inside any task or service `create` fn): local path of
-    * an attached file, by name.
+    * an attached file or directory, by name (Jet's `attachedFile` and
+    * `attachedDirectory`).
     */
   def attachedFile(name: String): java.io.File =
     new java.io.File(SparkFiles.get(name))
-
-  /** Task side: local path of an attached directory, by name. */
-  def attachedDirectory(name: String): java.io.File = attachedFile(name)
 }

@@ -455,7 +455,6 @@ final class BatchStage[T](val ds: Dataset[T]) {
 
   /** Jet `distinct` (BatchStage.java:221). */
   def distinct(): BatchStage[T] = new BatchStage(ds.dropDuplicates())
-  def distinctBy(keys: String*): BatchStage[T] = new BatchStage(ds.dropDuplicates(keys))
 
   /** Jet `merge` (BatchStage.java:234): union-all. */
   def merge(other: BatchStage[T]): BatchStage[T] = new BatchStage(ds.union(other.ds))

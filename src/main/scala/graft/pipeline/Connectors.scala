@@ -37,17 +37,6 @@ object Connectors {
           .options(options).load()
     }
 
-  /** Jet `KinesisSinks.kinesis` (KinesisSinks.java): at-least-once Kinesis
-    * sink via foreachBatch over the user-supplied putRecords call —
-    * Spark has no first-party kinesis sink; the per-batch delivery +
-    * checkpoint replay contract is the same as [[StreamSinks.foreachBatch]]
-    * (tested); only the AWS SDK call is the user's.
-    */
-  def kinesisSink(putBatch: (DataFrame, Long) => Unit,
-                  checkpoint: Option[String] = None): StreamSink =
-    StreamSinks.foreachBatch(putBatch, outputMode = "append",
-      checkpoint = checkpoint)
-
   /** Jet `ElasticSources.elastic(...)` (extensions/elasticsearch/
     * elasticsearch-7/.../ElasticSources.java — co-located scroll reads):
     * batch read of an index. Spark mapping: the elasticsearch-hadoop
@@ -65,20 +54,7 @@ object Connectors {
           .options(options).load(resource)
     }
 
-  /** Jet `ElasticSinks.elastic` (ElasticSinks.java): bulk-indexing sink,
-    * at-least-once (the reference's guarantee too — its ES sink is not
-    * transactional). Same connector, write path.
-    */
-  def elasticSink(nodes: String, resource: String,
-                  options: Map[String, String] = Map.empty): Sink =
-    new Sink {
-      def write(df: DataFrame): Unit =
-        df.write.format("org.elasticsearch.spark.sql")
-          .option("es.nodes", nodes)
-          .options(options).mode("append").save(resource)
-    }
-
-  /** Jet `Sources.jmsQueue(factorySupplier, name)` / `jmsTopic`
+  /** Jet `Sources.jmsQueue(factorySupplier, name)`
     * (Sources.java:1125-1265, impl/connector/StreamJmsP.java): JMS consumer
     * source. Spark has NO standard JMS connector, so this is a genuine
     * adapter over the tested custom-source machinery
@@ -96,14 +72,6 @@ object Connectors {
       close: S => Unit = (_: S) => ()): SparkSession => Sources.BuiltStream =
     Sources.buildStream[S, T]()(() => connect(name))(receive)(close)
 
-  /** Jet `Sources.jmsTopic` — identical adapter; durable-subscription
-    * semantics live in the user's `connect`.
-    */
-  def jmsTopic[S, T: Encoder](name: String, connect: String => S)(
-      receive: S => Option[Seq[T]])(
-      close: S => Unit = (_: S) => ()): SparkSession => Sources.BuiltStream =
-    jmsQueue[S, T](name, connect)(receive)(close)
-
   /** Jet `Sinks.jmsQueue` (WriteJmsP.java; XA variant out of scope): per
     * micro-batch, each partition opens the user's producer, sends its rows,
     * closes — at-least-once under replay (the reference's non-XA guarantee).
@@ -120,20 +88,13 @@ object Connectors {
         try it.foreach(r => sendRow(session, r)) finally close(session)
       }, outputMode = "append", checkpoint = checkpoint)
 
-  /** Jet `Sources.jmsQueueBuilder` / `jmsTopicBuilder`
-    * (JmsSourceBuilder.java): the fluent form of [[jmsQueue]]/[[jmsTopic]] —
+  /** Jet `Sources.jmsQueueBuilder`
+    * (JmsSourceBuilder.java): the fluent form of [[jmsQueue]] —
     * connectionFn / receiveFn / closeFn set separately, `build()` yields the
     * same tested SourceBuilder pump.
     */
   def jmsQueueBuilder[S, T: Encoder](name: String): JmsSourceBuilder[S, T] =
     new JmsSourceBuilder[S, T](name)
-  def jmsTopicBuilder[S, T: Encoder](name: String): JmsSourceBuilder[S, T] =
-    new JmsSourceBuilder[S, T](name)
-
-  /** Jet `Sinks.jmsQueueBuilder` / `jmsTopicBuilder` (JmsSinkBuilder.java):
-    * fluent form of [[jmsSink]].
-    */
-  def jmsSinkBuilder[S](name: String): JmsSinkBuilder[S] = new JmsSinkBuilder[S](name)
 }
 
 /** Fluent JMS source (Jet JmsSourceBuilder). */
@@ -148,22 +109,5 @@ final class JmsSourceBuilder[S, T: Encoder] private[pipeline] (name: String) {
     require(connectFn != null && receiveFn != null,
       "jms source builder needs connectionFn and receiveFn")
     Connectors.jmsQueue[S, T](name, connectFn)(receiveFn)(closeFn)
-  }
-}
-
-/** Fluent JMS sink (Jet JmsSinkBuilder). */
-final class JmsSinkBuilder[S] private[pipeline] (name: String) {
-  private var connectFn: String => S = _
-  private var sendFn: (S, Row) => Unit = _
-  private var closeFn: S => Unit = (_: S) => ()
-  private var ckpt: Option[String] = None
-  def connectionFn(f: String => S): JmsSinkBuilder[S] = { connectFn = f; this }
-  def sendFn(f: (S, Row) => Unit): JmsSinkBuilder[S] = { sendFn = f; this }
-  def closeFn(f: S => Unit): JmsSinkBuilder[S] = { closeFn = f; this }
-  def checkpoint(path: String): JmsSinkBuilder[S] = { ckpt = Some(path); this }
-  def build(): StreamSink = {
-    require(connectFn != null && sendFn != null,
-      "jms sink builder needs connectionFn and sendFn")
-    Connectors.jmsSink[S](name, connectFn, ckpt)(sendFn)(closeFn)
   }
 }

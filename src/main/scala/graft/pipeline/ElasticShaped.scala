@@ -46,7 +46,6 @@ object ElasticShaped {
     def enableSlicing(): SourceBuilder = copy(slicing = true)
     def withSlices(n: Int): SourceBuilder = copy(slices = n)
     def withPageSize(n: Int): SourceBuilder = copy(pageSize = n)
-    def withRetries(n: Int): SourceBuilder = copy(retries = n)
 
     /** Build the DataFrame: columns `(id STRING, doc STRING)` — the hit `_id`
       * and raw `_source` JSON; parse downstream with `from_json` (the
@@ -77,9 +76,6 @@ object ElasticShaped {
       index: String,
       bulkSize: Int = 500,
       retries: Int = 5) {
-
-    def withBulkSize(n: Int): SinkBuilder = copy(bulkSize = n)
-    def withRetries(n: Int): SinkBuilder = copy(retries = n)
 
     /** Bulk-write the frame; expects columns `id` and `doc`. */
     def write(df: DataFrame): Unit = {

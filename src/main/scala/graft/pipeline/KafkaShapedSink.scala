@@ -152,13 +152,6 @@ final class InMemoryTxnBroker {
     topicParts.getOrElse(topic, 1)
   }
 
-  /** read_committed view of ONE partition, in offset order — a stable
-    * snapshot copy.
-    */
-  def visiblePartition(topic: String, partition: Int): Seq[String] = synchronized {
-    partLogs.get((topic, partition)).map(_.toIndexedSeq).getOrElse(Vector.empty)
-  }
-
   /** Exclusive end offset of one partition's read_committed log. */
   def endOffset(topic: String, partition: Int): Long = synchronized {
     partLogs.get((topic, partition)).map(_.size.toLong).getOrElse(0L)

@@ -263,7 +263,7 @@ object KeyedStore {
     }
   }
 
-  /** IList-style append. Journaled (op APPEND) so `Sinks.reliableTopic` readers
+  /** IList-style append. Journaled (op APPEND) so `Sources.mapJournal` readers
     * can subscribe to the list as a stream.
     */
   def append(name: String, df: DataFrame): Unit = locked(name) {

@@ -26,7 +26,6 @@ final class Observable[T] private[pipeline] (val name: String) {
 
   /** Jet `Observable.configureCapacity` (Observable.java:137). */
   def configureCapacity(n: Int): Observable[T] = { capacity = n; this }
-  def getConfiguredCapacity: Int = capacity
 
   /** Jet `addObserver`: late subscribers first replay everything retained. */
   def addObserver(onNext: T => Unit,

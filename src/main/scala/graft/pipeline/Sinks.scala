@@ -19,25 +19,6 @@ object ServiceFactories {
   def service[S](create: () => S, destroy: S => Unit = (_: S) => ()): ServiceFactory[S] =
     ServiceFactory(create, destroy)
 
-  /** Jet `ServiceFactories.sharedService(createFn[, destroyFn])`
-    * (ServiceFactories.java:116,149) — name-parity alias: one service
-    * instance per task (Spark's unit of parallelism), shared by every row
-    * that task processes.
-    */
-  def sharedService[S](create: () => S,
-                       destroy: S => Unit = (_: S) => ()): ServiceFactory[S] =
-    service(create, destroy)
-
-  /** Jet `ServiceFactories.nonSharedService` (ServiceFactories.java:183) —
-    * name-parity alias. Jet distinguishes per-member (shared) from
-    * per-processor (non-shared) instances; here both are per-task — the
-    * finer granularity, always safe (a non-thread-safe client never sees
-    * concurrent use).
-    */
-  def nonSharedService[S](create: () => S,
-                          destroy: S => Unit = (_: S) => ()): ServiceFactory[S] =
-    service(create, destroy)
-
   /** Wrap a partition's output iterator with the service teardown contract:
     * destroy runs EXACTLY ONCE, on exhaustion OR task completion — a consumer
     * that re-checks hasNext after false must not double-close the handle, and
@@ -74,11 +55,6 @@ object Sinks {
   def json(path: String): Sink = files(path, "json")
   def csv(path: String): Sink = files(path, "csv", options = Map("header" -> "true"))
 
-  /** Jet `Sinks.logger` (Sinks.java:1067): print a bounded sample. */
-  def logger(n: Int = 20): Sink = new Sink {
-    def write(df: DataFrame): Unit = df.show(n, truncate = false)
-  }
-
   /** Jet `Sinks.noop` (Sinks.java:1084): full evaluation, discard output. */
   def noop: Sink = new Sink {
     def write(df: DataFrame): Unit =
@@ -90,11 +66,10 @@ object Sinks {
     def write(df: DataFrame): Unit = KeyedStore.upsert(name, df, keyCols)
   }
 
-  /** Jet `Sinks.cache` / `remoteMap` / `remoteCache` (Sinks.java:193-280):
+  /** Jet `Sinks.cache` / `remoteCache` (Sinks.java:193-280):
     * same upsert — remoteness is the store address, not an operator.
     */
   def cache(name: String, keyCols: String*): Sink = map(name, keyCols: _*)
-  def remoteMap(name: String, keyCols: String*): Sink = map(name, keyCols: _*)
 
   /** Jet `Sinks.mapWithMerging` (Sinks.java:313-421, UpdateMapP.java): upsert
     * where key conflicts are resolved by per-column merge expressions over
@@ -139,14 +114,6 @@ object Sinks {
     def write(df: DataFrame): Unit = KeyedStore.append(name, df)
   }
 
-  /** Jet `Sinks.reliableTopic` (Sinks.java:1109): publish each row to a named
-    * topic. Backed by the KeyedStore list + its change journal, so a
-    * subscriber reads the topic as a stream (`KeyedStore.journal`).
-    */
-  def reliableTopic(name: String): Sink = new Sink {
-    def write(df: DataFrame): Unit = KeyedStore.append(name, df)
-  }
-
   /** Jet `Sinks.socket` (Sinks.java:913-941, WriteBufferedP): write each row
     * as one line to a TCP endpoint. One connection per task (the reference's
     * per-processor buffered writer); a single-column row sends its value,
@@ -187,21 +154,11 @@ object Sinks {
     def write(df: DataFrame): Unit = df.write.mode("append").jdbc(url, table, props)
   }
 
-  /** Jet remote sink variants (Sinks.java:193-280, 421, 591, 731, 1109):
+  /** Jet remote sink variants (Sinks.java:193-280):
     * remoteness is the store address, not an operator — same tested paths.
     */
   def remoteCache(name: String, keyCols: String*): Sink = map(name, keyCols: _*)
   def remoteList(name: String): Sink = list(name)
-  def remoteReliableTopic(name: String): Sink = reliableTopic(name)
-  def remoteMapWithMerging(name: String, keyCols: Seq[String],
-                           merge: Map[String, (Column, Column) => Column]): Sink =
-    mapWithMerging(name, keyCols, merge)
-  def remoteMapWithUpdating(name: String, keyCols: Seq[String],
-                            update: Map[String, (Column, Column) => Column]): Sink =
-    mapWithUpdating(name, keyCols, update)
-  def remoteMapWithEntryProcessor(name: String, keyCols: Seq[String],
-                                  process: Map[String, (Column, Column) => Column]): Sink =
-    mapWithEntryProcessor(name, keyCols, process)
 
   /** Jet `Sinks.observable(name)` (Sinks.java:1357): publish results to the
     * named client-side [[Observable]] channel — obtain it with

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 trait BatchSource[T] { def read(spark: SparkSession): Dataset[T] }
 
 /** Unbounded source vocabulary (reference: Sources.socket/fileWatcher,
-  * TestSources.itemStream, KafkaSources) → Structured Streaming readers.
+  * KafkaSources) → Structured Streaming readers.
   */
 trait StreamSource { def read(spark: SparkSession): DataFrame }
 
@@ -19,17 +19,6 @@ object Sources {
   def items[T: Encoder](xs: Seq[T]): BatchSource[T] = new BatchSource[T] {
     def read(spark: SparkSession): Dataset[T] = spark.createDataset(xs)
   }
-
-  /** Jet `TestSources.itemsDistributed` (TestSources.java:84): the items
-    * pre-spread across members instead of emitted from one. Spark's
-    * `createDataset` already distributes; `numSlices` pins the partition
-    * count (the reference's member fan-out knob).
-    */
-  def itemsDistributed[T: Encoder](xs: Seq[T], numSlices: Int): BatchSource[T] =
-    new BatchSource[T] {
-      def read(spark: SparkSession): Dataset[T] =
-        spark.createDataset(xs).repartition(numSlices)
-    }
 
   /** Jet `Sources.list` (Sources.java:886): bounded scan of a named in-memory
     * list — here backed by the KeyedStore catalog (see `KeyedStore`).
@@ -46,20 +35,18 @@ object Sources {
     def read(spark: SparkSession): Dataset[Row] = KeyedStore.get(spark, name)
   }
 
-  /** Jet `Sources.cache` (Sources.java:303) / `remoteMap` / `remoteCache`
-    * (Sources.java:228,344): same columnar scan — remoteness is a deployment
+  /** Jet `Sources.cache` (Sources.java:303) / `remoteCache`
+    * (Sources.java:344): same columnar scan — remoteness is a deployment
     * property (the store address), not an operator.
     */
   def cache(name: String): BatchSource[Row] = map(name)
-  def remoteMap(name: String): BatchSource[Row] = map(name)
   def remoteCache(name: String): BatchSource[Row] = map(name)
   def remoteList(name: String): BatchSource[Row] = new BatchSource[Row] {
     def read(spark: SparkSession): Dataset[Row] = KeyedStore.get(spark, name)
   }
 
-  /** Jet `Sources.mapJournal` / `cacheJournal` and the remote variants
-    * (Sources.java:412,462,520,568): a store's change journal as an
-    * UNBOUNDED stream of change records. `startFromOldest` maps Jet's
+  /** Jet `Sources.mapJournal` (Sources.java:412): a store's change journal
+    * as an UNBOUNDED stream of change records. `startFromOldest` maps Jet's
     * `JournalInitialPosition`: START_FROM_OLDEST = a SYNC snapshot of the
     * current contents followed by changes; START_FROM_CURRENT (default) =
     * changes only. Backed by [[KeyedStore.journal]] (per-subscriber
@@ -71,18 +58,12 @@ object Sources {
       def read(spark: SparkSession): DataFrame =
         KeyedStore.journal(spark, name, startFromOldest)
     }
-  def cacheJournal(name: String, startFromOldest: Boolean = false): StreamSource =
-    mapJournal(name, startFromOldest)
-  def remoteMapJournal(name: String, startFromOldest: Boolean = false): StreamSource =
-    mapJournal(name, startFromOldest)
-  def remoteCacheJournal(name: String, startFromOldest: Boolean = false): StreamSource =
-    mapJournal(name, startFromOldest)
 
   /** Jet `Sources.batchFromProcessor` (Sources.java:126) — the custom-source
     * escape hatch. The Spark analog of "supply your own processors" is
     * "supply your own plan": any Dataset-producing function becomes a
     * first-class source (the DSv2 connector API is the heavier equivalent,
-    * see graft.streaming.PacedRateSource for a full example).
+    * see graft.streaming.KafkaShapedSource for a full example).
     */
   def batchFromProcessor[T](readFn: SparkSession => Dataset[T]): BatchSource[T] =
     new BatchSource[T] { def read(spark: SparkSession): Dataset[T] = readFn(spark) }
@@ -292,24 +273,6 @@ object Sources {
     }
 
   // ------------------------------------------------------------- streaming
-
-  /** Jet `TestSources.itemStream(rate)` / SQL GENERATE_STREAM →
-    * `readStream.format("rate")`: (timestamp, value) rows at `eventsPerSecond`.
-    */
-  def itemStream(eventsPerSecond: Int): StreamSource = new StreamSource {
-    def read(spark: SparkSession): DataFrame =
-      spark.readStream.format("rate")
-        .option("rowsPerSecond", eventsPerSecond.toString).load()
-  }
-
-  /** Jet `TestSources.longStream` (TestSources.java:211): monotonically
-    * increasing longs at the given rate — the rate source's `value` column
-    * alone (the reference documents it as the lighter primitive-only variant).
-    */
-  def longStream(eventsPerSecond: Int): StreamSource = new StreamSource {
-    def read(spark: SparkSession): DataFrame =
-      itemStream(eventsPerSecond).read(spark).select("value")
-  }
 
   /** Jet `Sources.socket` (Sources.java:950) → socket source (exact match). */
   def socket(host: String, port: Int): StreamSource = new StreamSource {

@@ -171,12 +171,6 @@ object StreamSinks {
       }
     }
 
-  /** Stream upsert into the KeyedStore — Jet `Sinks.map` applied to a
-    * StreamStage: per-batch MERGE, last-writer-wins.
-    */
-  def mapSink(storeName: String, keyCols: String*): StreamSink =
-    foreachBatch((batch, _) => KeyedStore.upsert(storeName, batch, keyCols))
-
   /** Jet DAG fan-out on a stream: one streaming stage feeding MULTIPLE sink
     * writers from a SINGLE query (Jet reads the source once and fans edges to
     * every sink vertex). Starting one StreamSink per writer would re-read the

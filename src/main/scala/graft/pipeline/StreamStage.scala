@@ -64,8 +64,6 @@ final class StreamStage(val df: DataFrame, val tsCol: String) {
     new StreamStage(df.withColumn(name, c), tsCol)
 
   def map[U: Encoder](f: Row => U): Dataset[U] = df.map(f)
-  def flatMapCol(c: Column, as: String): StreamStage =
-    new StreamStage(df.withColumn(as, explode(c)), tsCol)
 
   /** Jet `merge` of two streams (StreamStage.java:67). */
   def merge(other: StreamStage): StreamStage =
@@ -648,25 +646,6 @@ object StatefulOps {
       tupleEnc: Encoder[(K, V)]): Dataset[V] =
     flatMapStateful[K, V, S, V](ds, keyFn, ttlMillis, createFn,
       (_, s, v) => { val (s2, keep) = filterFn(s, v); (s2, if (keep) Seq(v) else Nil) })
-
-  /** Jet global `flatMapStateful`/`filterStateful` (GeneralStage.java:198,239):
-    * one state object for the whole stream — same single-task caveat as
-    * [[mapStatefulGlobal]].
-    */
-  def flatMapStatefulGlobal[V, S, O](
-      ds: Dataset[V], createFn: () => S, flatMapFn: (S, V) => (S, IterableOnce[O]))(
-      implicit se: Encoder[S], oe: Encoder[O],
-      tupleEnc: Encoder[(Int, V)]): Dataset[O] =
-    flatMapStateful[Int, V, S, O](ds, _ => 0, ttlMillis = 0, createFn,
-      (_, s, v) => flatMapFn(s, v))(
-      org.apache.spark.sql.Encoders.scalaInt, se, oe, tupleEnc)
-
-  def filterStatefulGlobal[V, S](
-      ds: Dataset[V], createFn: () => S, filterFn: (S, V) => (S, Boolean))(
-      implicit se: Encoder[S], ve: Encoder[V],
-      tupleEnc: Encoder[(Int, V)]): Dataset[V] =
-    flatMapStatefulGlobal[V, S, V](ds, createFn,
-      (s, v) => { val (s2, keep) = filterFn(s, v); (s2, if (keep) Seq(v) else Nil) })
 
   /** Jet `rollingAggregate` (StreamStageWithKey.java:256): running accumulator
     * per key, one output per input event.

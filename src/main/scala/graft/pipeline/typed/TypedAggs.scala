@@ -26,17 +26,17 @@ object TypedAggs {
     * doubles is equivalent and Encoder-friendly).
     */
   final class TopN(n: Int) extends Aggregator[Double, Seq[Double], Seq[Double]] {
-    def zero: Seq[Double] = Vector.empty
-    def reduce(buf: Seq[Double], v: Double): Seq[Double] =
+    override def zero: Seq[Double] = Vector.empty
+    override def reduce(buf: Seq[Double], v: Double): Seq[Double] =
       if (buf.size < n) (buf :+ v).sorted
       else if (v > buf.head) (buf.tail :+ v).sorted
       else buf
-    def merge(a: Seq[Double], b: Seq[Double]): Seq[Double] =
+    override def merge(a: Seq[Double], b: Seq[Double]): Seq[Double] =
       (a ++ b).sorted.takeRight(n)
-    def finish(buf: Seq[Double]): Seq[Double] = buf.reverse
-    def bufferEncoder: Encoder[Seq[Double]] = implicitly(
+    override def finish(buf: Seq[Double]): Seq[Double] = buf.reverse
+    override def bufferEncoder: Encoder[Seq[Double]] = implicitly(
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
-    def outputEncoder: Encoder[Seq[Double]] = implicitly(
+    override def outputEncoder: Encoder[Seq[Double]] = implicitly(
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
   }
   def topN(n: Int): TopN = new TopN(n)
@@ -53,8 +53,8 @@ object TypedAggs {
   final case class LinTrendBuf(n: Long, mx: Double, my: Double, m2x: Double, cxy: Double)
 
   object LinearTrend extends Aggregator[(Double, Double), LinTrendBuf, Option[Double]] {
-    def zero: LinTrendBuf = LinTrendBuf(0L, 0.0, 0.0, 0.0, 0.0)
-    def reduce(b: LinTrendBuf, in: (Double, Double)): LinTrendBuf = {
+    override def zero: LinTrendBuf = LinTrendBuf(0L, 0.0, 0.0, 0.0, 0.0)
+    override def reduce(b: LinTrendBuf, in: (Double, Double)): LinTrendBuf = {
       val (x, y) = in
       val n = b.n + 1
       val dx = x - b.mx
@@ -64,7 +64,7 @@ object TypedAggs {
       // Welford: dx uses the OLD mean, (x - mx) the new one
       LinTrendBuf(n, mx, my, b.m2x + dx * (x - mx), b.cxy + dx * (y - my))
     }
-    def merge(a: LinTrendBuf, b: LinTrendBuf): LinTrendBuf =
+    override def merge(a: LinTrendBuf, b: LinTrendBuf): LinTrendBuf =
       if (a.n == 0) b
       else if (b.n == 0) a
       else {
@@ -79,10 +79,10 @@ object TypedAggs {
           a.m2x + b.m2x + dx * dx * w,
           a.cxy + b.cxy + dx * dy * w)
       }
-    def finish(b: LinTrendBuf): Option[Double] =
+    override def finish(b: LinTrendBuf): Option[Double] =
       if (b.n == 0 || b.m2x == 0.0) None else Some(b.cxy / b.m2x)
-    def bufferEncoder: Encoder[LinTrendBuf] = Encoders.product[LinTrendBuf]
-    def outputEncoder: Encoder[Option[Double]] = implicitly(
+    override def bufferEncoder: Encoder[LinTrendBuf] = Encoders.product[LinTrendBuf]
+    override def outputEncoder: Encoder[Option[Double]] = implicitly(
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Option[Double]]())
   }
 
@@ -99,13 +99,13 @@ object TypedAggs {
     * hash stays in the SQL layer so the oracle can replay it.
     */
   final class KmvDistinct(k: Int) extends Aggregator[Double, Seq[Double], Double] {
-    def zero: Seq[Double] = Vector.empty
+    override def zero: Seq[Double] = Vector.empty
     // The buffer is kept SORTED ascending. Once it's full, a row whose hash is
     // ≥ the current kth-min is rejected in O(1) — the overwhelmingly common
     // case at high cardinality (acceptance probability k/n). Accepted values
     // binary-search their slot; no full re-sort per row (the old
     // `.contains` + `.sorted` form was O(k log k) on EVERY row).
-    def reduce(buf: Seq[Double], h: Double): Seq[Double] = {
+    override def reduce(buf: Seq[Double], h: Double): Seq[Double] = {
       val full = buf.size >= k
       if (full && h >= buf.last) buf
       else {
@@ -122,13 +122,13 @@ object TypedAggs {
         }
       }
     }
-    def merge(a: Seq[Double], b: Seq[Double]): Seq[Double] =
+    override def merge(a: Seq[Double], b: Seq[Double]): Seq[Double] =
       (a ++ b).distinct.sorted.take(k)
-    def finish(buf: Seq[Double]): Double =
+    override def finish(buf: Seq[Double]): Double =
       if (buf.size < k) buf.size.toDouble else (k - 1) / buf.last
-    def bufferEncoder: Encoder[Seq[Double]] = implicitly(
+    override def bufferEncoder: Encoder[Seq[Double]] = implicitly(
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+    override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
   def kmvDistinct(k: Int): KmvDistinct = new KmvDistinct(k)
 
@@ -138,12 +138,12 @@ object TypedAggs {
     */
   final class Reducing[T](z: T, combine: (T, T) => T)(implicit enc: Encoder[T])
       extends Aggregator[T, T, T] {
-    def zero: T = z
-    def reduce(b: T, v: T): T = combine(b, v)
-    def merge(a: T, b: T): T = combine(a, b)
-    def finish(b: T): T = b
-    def bufferEncoder: Encoder[T] = enc
-    def outputEncoder: Encoder[T] = enc
+    override def zero: T = z
+    override def reduce(b: T, v: T): T = combine(b, v)
+    override def merge(a: T, b: T): T = combine(a, b)
+    override def finish(b: T): T = b
+    override def bufferEncoder: Encoder[T] = enc
+    override def outputEncoder: Encoder[T] = enc
   }
   def reducing[T: Encoder](zero: T)(combine: (T, T) => T): Reducing[T] =
     new Reducing[T](zero, combine)

@@ -139,8 +139,8 @@ object MultimodalQueries {
     * analytically from doc_id (q45's synthesize-and-predict device), so a
     * decode that didn't actually parse the bytes hash-mismatches.
     * duration_us = frames·125 exactly at 8 kHz (integer — no float time
-    * arithmetic). Compressed codecs (mp3/aac) need external libraries and
-    * stay on decodeStub; this pins the WAV/PCM path end-to-end.
+    * arithmetic). Compressed codecs (mp3/aac) need external libraries;
+    * this pins the WAV/PCM path end-to-end.
     */
   val q118_audio_decode: Q = (s, dir) => {
     import s.implicits._
@@ -166,7 +166,7 @@ object MultimodalQueries {
       |FROM documents""".stripMargin
 
   // -------------------------------------------- q164 mp3 frame-header walk
-  /** MP3 container metadata WITHOUT a codec (r10 — shrinking the decodeStub
+  /** MP3 container metadata WITHOUT a codec (r10 — shrinking the codec
     * boundary): the MPEG Layer III frame-header walk (ISO/IEC 11172-3
     * public tables) counts frames by advancing through per-frame sizes
     * computed from each header's own bitrate/rate/padding bits, skipping a
@@ -176,8 +176,7 @@ object MultimodalQueries {
     * (frame sizes vary per doc by bitrate index and alternate padding), so
     * a parser that didn't actually walk the chain miscounts and
     * hash-mismatches. PCM sample extraction still needs an external codec
-    * and stays on decodeStub — the boundary is now "samples", not
-    * "metadata".
+    * — the boundary is now "samples", not "metadata".
     */
   val q164_mp3_metadata: Q = (s, dir) => {
     import s.implicits._

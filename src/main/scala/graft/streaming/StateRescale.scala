@@ -240,6 +240,6 @@ object StateRescale {
   * exactly the partition the hash distribution chose, not a re-hash of it.
   */
 private[streaming] final class IdentityPartitioner(n: Int) extends Partitioner {
-  def numPartitions: Int = n
-  def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  override def numPartitions: Int = n
+  override def getPartition(key: Any): Int = key.asInstanceOf[Int]
 }

@@ -6,13 +6,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 /** Per-query streaming metrics (reference: late-event counter
   * `lateEventsDropped` in TransformStatefulP.java:100-106 / SlidingWindowP;
   * SURVEY §2.8) — a `StreamingQueryListener` folding each progress event's
-  * state-operator counters into a queryable map.
+  * counters into job-lifetime totals per query id, which
+  * `JobHandle.metrics` reads.
   */
 final class Metrics extends org.apache.spark.sql.streaming.StreamingQueryListener {
   import org.apache.spark.sql.streaming.StreamingQueryListener._
 
-  private val late = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private val rows = new java.util.concurrent.ConcurrentHashMap[String, Long]()
   // cumulative per-query-ID counters (Jet's JobMetrics are job-lifetime
   // totals, not last-batch snapshots): keyed by StreamingQuery.id so a
   // restarted-from-checkpoint query keeps accumulating under its stable id
@@ -22,10 +21,7 @@ final class Metrics extends org.apache.spark.sql.streaming.StreamingQueryListene
   override def onQueryStarted(e: QueryStartedEvent): Unit = ()
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
-    val name = Option(e.progress.name).getOrElse(e.progress.id.toString)
     val dropped = e.progress.stateOperators.map(_.numRowsDroppedByWatermark).sum
-    late.merge(name, dropped, (a, b) => a + b)
-    rows.merge(name, e.progress.numInputRows, (a, b) => a + b)
     val batchMs = Option(e.progress.durationMs)
       .flatMap(d => Option(d.get("triggerExecution"))).map(_.longValue).getOrElse(0L)
     val delta = Map(
@@ -39,18 +35,14 @@ final class Metrics extends org.apache.spark.sql.streaming.StreamingQueryListene
     ()
   }
 
-  /** Jet `lateEventsDropped` analog for a named query. */
-  def lateEventsDropped(query: String): Long = late.getOrDefault(query, 0L)
-  def inputRows(query: String): Long = rows.getOrDefault(query, 0L)
-
   /** Job-lifetime counters for a StreamingQuery id (empty before progress). */
   def cumulative(queryId: String): Map[String, Long] =
     byId.getOrDefault(queryId, Map.empty)
 }
 
 object Metrics {
-  /** Install a metrics listener on the session (idempotent per instance). */
-  def install(spark: SparkSession): Metrics = {
+  /** Add a new metrics listener to the session. */
+  private def install(spark: SparkSession): Metrics = {
     val m = new Metrics
     spark.streams.addListener(m)
     m

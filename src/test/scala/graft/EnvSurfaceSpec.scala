@@ -84,13 +84,8 @@ object EnvSurfaceSpec {
     "env:SPARK_GRAFT_BENCH_ORDER",
     "env:SPARK_GRAFT_BENCH_OUT",
     "env:SPARK_GRAFT_NO_WARM_PASS",
-    // rate and latency rigs
-    "env:SPARK_GRAFT_ANN_INDEX",
+    // rate rigs
     "env:SPARK_GRAFT_ANN_INDEX_DIR",
-    "env:SPARK_GRAFT_CONT_MODES",
-    "env:SPARK_GRAFT_CONT_PARTS",
-    "env:SPARK_GRAFT_CONT_SHAPES",
-    "env:SPARK_GRAFT_LATENCY_RATE",
     "env:SPARK_GRAFT_MAXRATE_ONLY",
     "env:SPARK_GRAFT_MAXRATE_PARTS",
     "env:SPARK_GRAFT_MAXRATE_PRIOR",

@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Output-equivalence pin for the continuous-processing latency probe
-  * (`graft.ContinuousLatency`): the SAME pure column transform (the NEXMark
-  * Q1 currency shape) must produce content-identical rows under
+/** Output-equivalence pin for continuous processing, the event-at-a-time
+  * execution path: the SAME pure column transform (the NEXMark Q1 currency
+  * shape) must produce content-identical rows under
   * `Trigger.Continuous` and under micro-batch execution — the two modes may
   * differ only in delivery timing. Verified against the transform's
   * definition on each mode's own consumed inputs (the rate source's value

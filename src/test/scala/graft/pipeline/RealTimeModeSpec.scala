@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Pins for Spark 4.1 real-time mode (`Trigger.RealTime`) as used by the
-  * latency probe (`graft.ContinuousLatency`):
+/** Pins for Spark 4.1 real-time mode (`Trigger.RealTime`), the
+  * event-at-a-time execution path for stateless shapes:
   *
   *   1. the paced source's rows under real-time execution are
   *      content-identical to the pure transform (mode equivalence — same

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.streaming.Metrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -37,7 +36,6 @@ class StreamDistinctSpec extends SparkSpec {
 
   test("late events are dropped and surfaced via the metrics listener") {
     implicit val sqlCtx = spark.sqlContext
-    val metrics = Metrics.install(spark)
     val mem = MemoryStream[(Timestamp, Double)]
     val agged = new StreamSourceStage(mem.toDF.toDF("ts", "v"))
       .withTimestamps("ts", "1 minute")
@@ -59,9 +57,8 @@ class StreamDistinctSpec extends SparkSpec {
     val closed = spark.table("late_test")
       .filter(col("window_start") === ts("2024-01-01 10:00:00")).collect()
     assert(closed.forall(_.getAs[Long]("n") === 1L), "late event leaked into closed window")
-    assert(metrics.lateEventsDropped("late_test") >= 1L,
-      s"late drop not counted (got ${metrics.lateEventsDropped("late_test")})")
+    val dropped = job.metrics.getOrElse("lateEventsDropped", 0.0)
+    assert(dropped >= 1.0, s"late drop not counted (got $dropped)")
     job.cancel()
-    spark.streams.removeListener(metrics)
   }
 }
